@@ -107,10 +107,11 @@ object Scratch {
         val agg = streaming.StreamingOps.streamTable(spark, sfDir, "events")
           .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
           .agg(count(lit(1)).as("cnt"))
-        val q = agg.writeStream.format("memory").queryName("sprof")
-          .outputMode("complete")
-          .option("checkpointLocation", s"/dev/shm/graft-ckpt/sprof-${System.nanoTime()}")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        val q = streaming.StreamingOps.startQuery(spark,
+          agg.writeStream.format("memory").queryName("sprof")
+            .outputMode("complete")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+          s"/dev/shm/graft-ckpt/sprof-${System.nanoTime()}")
         q.awaitTermination()
         println(f"[scratch] total ${(System.nanoTime() - t0) / 1e9}%.3f s")
         q.recentProgress.foreach { p =>
@@ -141,10 +142,11 @@ object Scratch {
           val joined = side("purchase", "p").join(side("click", "c"),
             expr("p_uid = c_uid AND c_ts >= p_ts AND c_ts <= p_ts + INTERVAL 10 MINUTES"),
             "leftOuter")
-          val q = joined.select(col("p_id"), col("c_id")).writeStream
-            .format("memory").queryName("ssjprof").outputMode("append")
-            .option("checkpointLocation", streaming.StreamingOps.freshCheckpoint("ssjprof"))
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+          val q = streaming.StreamingOps.startQuery(spark,
+            joined.select(col("p_id"), col("c_id")).writeStream
+              .format("memory").queryName("ssjprof").outputMode("append")
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+            streaming.StreamingOps.freshCheckpoint("ssjprof"))
           q.awaitTermination()
           println(f"[scratch] ssj total ${(System.nanoTime() - t0) / 1e9}%.3f s rows=${spark.table("ssjprof").count()}")
           q.recentProgress.foreach { p =>
@@ -189,10 +191,9 @@ object Scratch {
           val agg = ChangelogAgg.agg(changes).toDF()
           val store = new UpsertSink.InMemoryStore()
           val ckpt = streaming.StreamingOps.freshCheckpoint("cdcprof")
-          val q = UpsertSink.foreachBatchChangelog(agg, "kind", Seq("key"), store)
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
+          val q = streaming.StreamingOps.startQuery(spark,
+            UpsertSink.foreachBatchChangelog(agg, "kind", Seq("key"), store)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()), ckpt)
           q.awaitTermination()
           println(f"[scratch] cdc-stream total ${(System.nanoTime() - t0) / 1e9}%.3f s")
           q.recentProgress.foreach { p =>

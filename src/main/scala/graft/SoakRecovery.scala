@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.streaming.StreamingOps
 
 /** Kill-restart recovery soak at the growth-gate tree — the analogue of the
   * reference's nightly recovery e2e (flink-end-to-end-tests/
@@ -173,10 +174,9 @@ object SoakRecovery {
         spark.conf.set(PartitionCommit.CrashBeforeRecordKey, b.toString))
       var sawCrash = false
       try {
-        val q = PartitionCommit.foreachBatchPartitioned(src, sink, "dy",
-            86400L, "ts", commitTag = Integer.toHexString(ckpt.hashCode))
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
+        val q = StreamingOps.startQuery(spark, PartitionCommit.foreachBatchPartitioned(src, sink,
+            "dy", 86400L, "ts", commitTag = Integer.toHexString(ckpt.hashCode))
+          .trigger(Trigger.AvailableNow()), ckpt)
         try q.awaitTermination()
         catch {
           // walk the FULL cause chain (as RobustnessSpec does): the injected
@@ -194,7 +194,7 @@ object SoakRecovery {
     // clean run: one uninterrupted drain
     val cleanSink = Tables.scratch(
       s"soak/x$Factor-pc-clean-${java.util.UUID.randomUUID()}")
-    run(cleanSink, graft.streaming.StreamingOps.freshCheckpoint("soak-pc-clean"),
+    run(cleanSink, StreamingOps.freshCheckpoint("soak-pc-clean"),
       crashBatch = None)
     val (cleanRows, cleanCk) = checksumOf(
       PartitionCommit.readCommitted(spark, cleanSink, "dy")
@@ -203,7 +203,7 @@ object SoakRecovery {
     // interrupted run: crash after batch 2's promote, restart, drain
     val sink = Tables.scratch(
       s"soak/x$Factor-pc-soak-${java.util.UUID.randomUUID()}")
-    val ckpt = graft.streaming.StreamingOps.freshCheckpoint("soak-pc")
+    val ckpt = StreamingOps.freshCheckpoint("soak-pc")
     val crashed = run(sink, ckpt, crashBatch = Some(2L))
     run(sink, ckpt, crashBatch = None) // recovery drain
     val (rows, ck) = checksumOf(
@@ -230,11 +230,10 @@ object SoakRecovery {
       .as[Change[Long, Double, Long]]
 
     def start(sink: String, ckpt: String): StreamingQuery =
-      ChangelogJoin.joinTws(changes).toDF()
+      StreamingOps.startQuery(spark, ChangelogJoin.joinTws(changes).toDF()
         .writeStream.format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
+        .trigger(Trigger.AvailableNow()), ckpt)
 
     def surviving(sink: String): DataFrame =
       spark.read.parquet(sink)
@@ -257,13 +256,13 @@ object SoakRecovery {
     val cleanSink = Tables.scratch(
       s"soak/x$Factor-$tag-clean-${java.util.UUID.randomUUID()}")
     val qc = start(cleanSink,
-      graft.streaming.StreamingOps.freshCheckpoint(s"soak-$tag-clean"))
+      StreamingOps.freshCheckpoint(s"soak-$tag-clean"))
     qc.awaitTermination()
     val (cleanRows, cleanCk) = checksumOf(materialize(cleanSink))
 
     val sink = Tables.scratch(
       s"soak/x$Factor-$tag-soak-${java.util.UUID.randomUUID()}")
-    val ckpt = graft.streaming.StreamingOps.freshCheckpoint(s"soak-$tag")
+    val ckpt = StreamingOps.freshCheckpoint(s"soak-$tag")
     val q1 = start(sink, ckpt)
     var killed = false
     val deadline = System.nanoTime() + 30L * 60 * 1000000000L
@@ -296,11 +295,10 @@ object SoakRecovery {
       .as[AggChange[Long]]
 
     def start(sink: String, ckpt: String): StreamingQuery =
-      ChangelogAgg.aggTws(changes).toDF()
+      StreamingOps.startQuery(spark, ChangelogAgg.aggTws(changes).toDF()
         .writeStream.format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
+        .trigger(Trigger.AvailableNow()), ckpt)
 
     // the aggregate's output is itself an upsert changelog; its surviving
     // rows (signed count per full output row > 0) are each key's FINAL
@@ -345,11 +343,10 @@ object SoakRecovery {
       .within(2L * 3600 * 1000000)
 
     def start(sink: String, ckpt: String): StreamingQuery =
-      CepTws.streamingMatchesTws(events, pat).toDF()
+      StreamingOps.startQuery(spark, CepTws.streamingMatchesTws(events, pat).toDF()
         .writeStream.format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
+        .trigger(Trigger.AvailableNow()), ckpt)
 
     killRestartCompare(spark, "cep", start, spark.read.parquet(_), t0)
   }
@@ -375,11 +372,10 @@ object SoakRecovery {
       .option("maxFilesPerTrigger", "2").parquet(feed)
 
     def start(sink: String, ckpt: String): StreamingQuery =
-      graft.streaming.NearDupStream.pairs(spark, docs)
+      StreamingOps.startQuery(spark, graft.streaming.NearDupStream.pairs(spark, docs)
         .writeStream.format("parquet").option("path", sink)
-        .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
+        .trigger(Trigger.AvailableNow()), ckpt)
 
     killRestartCompare(spark, "nd", start, spark.read.parquet(_), t0)
   }

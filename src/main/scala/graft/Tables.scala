@@ -27,10 +27,16 @@ object Tables {
     * infers as TIMESTAMP_NTZ). [[normalize]] folds every encoding to one
     * µs TimestampType column so operators never see the drift. */
   def raw(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pinReadConf(spark, name)
     spark.read.parquet(s"$dir/$name.parquet")
   }
+
+  /** The session conf a scan of fixture `name` needs: the legacy NANOS read
+    * for `events`. Set on the scanning session itself — a schema served
+    * from [[rawSchema]]'s JVM-wide cache carries no conf. */
+  def pinReadConf(spark: SparkSession, name: String): Unit =
+    if (name == "events")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   private val tableCache = new java.util.concurrent.ConcurrentHashMap[
     (Int, String, String), (SparkSession, DataFrame)]()
@@ -40,7 +46,8 @@ object Tables {
     * `spark.read.parquet` (directory listing + footer read) just to throw
     * the relation away after `.schema`. The schema is a pure function of
     * the fixture files (plus the pinned nanosAsLong conf [[raw]] sets for
-    * events), so one read serves every query and session in the JVM. */
+    * events), so one read serves every query and session in the JVM; a
+    * session that scans with it must still [[pinReadConf]] itself. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String), org.apache.spark.sql.types.StructType]()
 

@@ -1105,10 +1105,8 @@ object GraftSql {
           df, sd.path, sd.partitions.head, durSec, tsCol,
           boundSec = boundSec, delaySec = pc.delaySec,
           commitTag = Integer.toHexString(ckpt.hashCode))
-        val q = at.writer
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
+        val q = graft.streaming.StreamingOps.startQuery(spark, at.writer
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()), ckpt)
         try q.awaitTermination() finally q.stop()
         val rb = PartitionCommit.readCommitted(spark, sd.path, sd.partitions.head)
         (rb, at.rowsWritten)
@@ -1118,12 +1116,11 @@ object GraftSql {
           try spark.read.format(sd.format).load(sd.path).count()
           catch { case _: org.apache.spark.sql.AnalysisException => 0L }
         val writer0 = df.writeStream.format(sd.format)
-          .option("checkpointLocation", ckpt)
           .option("path", sd.path)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         val writer = if (sd.partitions.nonEmpty)
           writer0.partitionBy(sd.partitions: _*) else writer0
-        val q = writer.start()
+        val q = graft.streaming.StreamingOps.startQuery(spark, writer, ckpt)
         try q.awaitTermination() finally q.stop()
         val rb = spark.read.format(sd.format).load(sd.path)
         (rb, rb.count() - before)
@@ -1182,14 +1179,13 @@ object GraftSql {
       val drained = spark.sparkContext.longAccumulator(s"graft-$name-rows")
       val ckpt = graft.Tables.scratch(
         s"insert-ckpt/$name-util-${java.util.UUID.randomUUID()}")
-      val q = df.writeStream.outputMode("append")
+      val q = graft.streaming.StreamingOps.startQuery(spark, df.writeStream
+        .outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           consume(batch, drained.add(_))
           () // blackhole: counting IS the consumption
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()), ckpt)
       try q.awaitTermination()
       finally { q.stop(); deleteRecursively(new java.io.File(ckpt)) }
       import spark.implicits._
@@ -1223,11 +1219,9 @@ object GraftSql {
     try {
       val ckpt = graft.Tables.scratch(
         s"insert-ckpt/$name-upsert-${java.util.UUID.randomUUID()}")
-      val q = graft.streaming.UpsertSink
+      val q = graft.streaming.StreamingOps.startQuery(spark, graft.streaming.UpsertSink
         .foreachBatchChangelog(df, "kind", sd.primaryKey, store)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()), ckpt)
       try q.awaitTermination()
       finally { q.stop(); deleteRecursively(new java.io.File(ckpt)) }
       val kindIdx = df.columns.indexOf("kind")

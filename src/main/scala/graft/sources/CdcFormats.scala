@@ -532,10 +532,9 @@ object CdcFormats {
       val agg = ChangelogAgg.agg(changes).toDF()
       val store = new UpsertSink.InMemoryStore()
       val ckpt = graft.streaming.StreamingOps.freshCheckpoint("cdc-stream")
-      val q = UpsertSink.foreachBatchChangelog(agg, "kind", Seq("key"), store)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = graft.streaming.StreamingOps.startQuery(s,
+        UpsertSink.foreachBatchChangelog(agg, "kind", Seq("key"), store)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()), ckpt)
       try q.awaitTermination()
       finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       // snapshot is keyed final state: 5 priority rows — metadata-sized
@@ -678,11 +677,9 @@ object CdcFormats {
           col("o_totalprice"), col("version"))
       val store = new UpsertSink.InMemoryStore()
       val ckpt = graft.streaming.StreamingOps.freshCheckpoint("cdc-replay")
-      val q = UpsertSink.foreachBatchChangelog(
+      val q = graft.streaming.StreamingOps.startQuery(s, UpsertSink.foreachBatchChangelog(
         changes, "kind", Seq("o_orderkey"), store)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()), ckpt)
       try q.awaitTermination()
       finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       val fin = store.snapshot().values.toSeq.map { row =>

@@ -97,9 +97,8 @@ object IterateStream {
     seed.write.mode("overwrite").parquet(srcDir)
     var rounds = 0 // foreachBatch runs on the driver; plain var is safe
     val stream = spark.readStream.schema(seed.schema).parquet(srcDir)
-    val q = stream.writeStream
+    val q = StreamingOps.startQuery(spark, stream.writeStream
       .outputMode("append")
-      .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // ONE job per round: the step output is written once, partitioned by
         // the feedback flag; routing to the loop vs the output is then pure
@@ -137,8 +136,7 @@ object IterateStream {
                 s"non-empty after $maxRounds rounds — raise maxRounds or " +
                 "fix the loop body so rows eventually leave the feedback edge")
         }
-      }
-      .start()
+      }, ckpt)
     try {
       // processAllAvailable blocks until the source has nothing new — and
       // feedback files written during batch N ARE new for batch N+1, so this

@@ -293,11 +293,9 @@ object PartitionCommit {
         .select($"event_id", $"value", $"ts")
         .withColumn("dy", (floor(unix_seconds($"ts") / 86400) * 86400).cast("long"))
       val ckpt = StreamingOps.freshCheckpoint("file-sink")
-      val q = foreachBatchPartitioned(src, path, "dy", 86400L, "ts",
+      val q = StreamingOps.startQuery(s, foreachBatchPartitioned(src, path, "dy", 86400L, "ts",
           commitTag = Integer.toHexString(ckpt.hashCode))
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()), ckpt)
       try q.awaitTermination()
       finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       readCommitted(s, path, "dy")

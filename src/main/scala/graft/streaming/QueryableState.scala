@@ -77,12 +77,10 @@ object QueryableState {
         }
       // noop sink still evaluates every partition (a sink that drops the
       // batch without consuming it would leave the state stores uncommitted)
-      val q = sunk.writeStream
+      val q = StreamingOps.startQuery(s, sunk.writeStream
         .format("noop")
         .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
+        .trigger(Trigger.AvailableNow()), ckpt)
       q.awaitTermination()
       // stage the snapshot out of the checkpoint (distributed write, no
       // collect) so the checkpoint files can be reclaimed eagerly
@@ -139,12 +137,10 @@ object QueryableState {
         val sunk = in.groupByKey(_.event_type)
           .transformWithState(new TypeStatsProcessor,
             org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-        val q = sunk.writeStream
+        val q = StreamingOps.startQuery(s, sunk.writeStream
           .format("noop")
           .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
+          .trigger(Trigger.AvailableNow()), ckpt)
         q.awaitTermination()
         stateOf(s, ckpt, stateVar = Some("agg"))
           .select(

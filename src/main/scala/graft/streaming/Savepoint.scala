@@ -95,26 +95,17 @@ object Savepoint {
       sink: String, processor: StatefulProcessorWithInitialState[String, (String, Long), S, Long],
       outCols: Seq[String]): DataFrame = {
     import spark.implicits._
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    TwsOps.withRocksDb(spark) {
       val out = input.as[(String, Long)]
         .groupByKey(_._1)
         .transformWithState(
           processor, TimeMode.None(), OutputMode.Update(),
           initial.groupByKey(_._1).mapValues(_._2))
-      val q = out.toDF(outCols: _*).writeStream
+      val q = StreamingOps.startQuery(spark, out.toDF(outCols: _*).writeStream
         .format("memory").queryName(sink).outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()), ckpt)
       q.awaitTermination()
       spark.table(sink)
-    } finally prevProv match {
-      case Some(v) => spark.conf.set(provKey, v)
-      case None => spark.conf.unset(provKey)
     }
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Structured Streaming twins of the window/dedup operators (reference §2.7:
   * streaming semantics core — WindowOperator.java, DeduplicateKeepFirstRow
@@ -34,6 +34,7 @@ object StreamingOps {
 
   def streamTable(spark: SparkSession, dir: String, name: String): DataFrame = {
     val schema = Tables.rawSchema(spark, dir, name)
+    Tables.pinReadConf(spark, name)
     val reader = spark.readStream.schema(schema)
     val mf = spark.conf.get(MaxFilesKey, "")
     val withOpts = if (mf.nonEmpty) reader.option("maxFilesPerTrigger", mf) else reader
@@ -81,10 +82,43 @@ object StreamingOps {
         i
       }.getOrElse(n)
     Option(currentQueryName.get).foreach(effectiveStatePartitions.put(_, eff))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", eff.toString)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    withConf(spark, "spark.sql.shuffle.partitions", eff.toString)(f)
   }
+
+  /** Set one session conf for the duration of `f`, then restore the
+    * caller's value (or unset it if the caller had none). A streaming
+    * query started inside `f` keeps the value: it plans in a clone of the
+    * session taken at start. */
+  def withConf[T](spark: SparkSession, key: String, value: String)(f: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** The ONE start path for the engine's streaming queries: sets the
+    * checkpoint location and starts the query under
+    * [[LocalCheckpointFileManager]], so its offset/commit logs, source logs
+    * and state stores write checkpoint files without forking
+    * `chmod`/`readlink`. */
+  def startQuery(spark: SparkSession, writer: DataStreamWriter[_], ckpt: String): StreamingQuery =
+    startQuery(spark, writer.option("checkpointLocation", ckpt))
+
+  /** [[startQuery]] for a writer that keeps Spark's temporary checkpoint
+    * (memory sinks without a location). */
+  def startQuery(spark: SparkSession, writer: DataStreamWriter[_]): StreamingQuery =
+    withConf(spark, LocalCheckpointFileManager.ClassKey,
+        classOf[LocalCheckpointFileManager].getName) {
+      val q = writer.start()
+      // file sources build their metadata log on the query's own thread,
+      // from THIS session's conf: hold the setting until that has happened
+      q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.awaitInitialization(Long.MaxValue)
+      q
+    }
 
   /** Run a streaming DataFrame to completion into an in-memory table and
     * return the materialized result.
@@ -95,10 +129,12 @@ object StreamingOps {
     * single-file fixtures here; assert it so a future multi-file fixture
     * (or maxFilesPerTrigger) fails loudly instead of returning stale rows. */
   /** Fresh per-run checkpoint dir on tmpfs when available: the
-    * offset/commit logs and state snapshots are fsynced every micro-batch,
-    * and replay-a-bounded-fixture queries never need durable recovery — on
-    * a disk-backed /tmp the fsyncs are a measurable slice of query
-    * startup. The ONE copy of the tmpfs-else-tmpdir choice. */
+    * offset/commit logs and state snapshots are rewritten every
+    * micro-batch, and replay-a-bounded-fixture queries never need durable
+    * recovery. Hadoop's local file system does not fsync; the per-file cost
+    * was the `chmod`/`readlink` subprocesses it starts without libhadoop,
+    * which [[LocalCheckpointFileManager]] removes. The ONE copy of the
+    * tmpfs-else-tmpdir choice. */
   def freshCheckpoint(tag: String): String = {
     val ckptBase =
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ckpt"
@@ -123,23 +159,19 @@ object StreamingOps {
     val ckpt = freshCheckpoint(name)
     if (mode == "append" && spark.conf.get(SinkKey, "memory") == "parquet") {
       val out = Tables.scratch(s"stream-sink/$name-${java.util.UUID.randomUUID()}")
-      val q = stream.writeStream
+      val q = startQuery(spark, stream.writeStream
         .format("parquet").option("path", out)
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
+        .trigger(Trigger.AvailableNow()), ckpt)
       try q.awaitTermination()
       finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       return spark.read.schema(stream.schema).parquet(out)
     }
-    val q = stream.writeStream
+    val q = startQuery(spark, stream.writeStream
       .format("memory")
       .queryName(name)
       .outputMode(mode)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()), ckpt)
     try q.awaitTermination()
     finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     if (mode == "update") {

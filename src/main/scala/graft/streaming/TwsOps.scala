@@ -137,17 +137,9 @@ object TwsOps {
     }
   }
 
-  private[graft] def withRocksDb[A](s: SparkSession)(body: => A): A = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prevProv match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None => s.conf.unset(provKey)
-    }
-  }
+  private[graft] def withRocksDb[A](s: SparkSession)(body: => A): A =
+    StreamingOps.withConf(s, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** Batch-mode transformWithState loads a real state store, which needs
     * the driver's StateStoreCoordinator RPC endpoint — registered only
@@ -164,8 +156,8 @@ object TwsOps {
       import s.implicits._
       val name = s"graft_state_coord_warm_${java.util.UUID.randomUUID().toString.take(8)}"
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = mem.toDS().groupBy().count().writeStream
-        .format("memory").queryName(name).outputMode("complete").start()
+      val q = StreamingOps.startQuery(s, mem.toDS().groupBy().count().writeStream
+        .format("memory").queryName(name).outputMode("complete"))
       try { mem.addData(1L); q.processAllAvailable() }
       finally { q.stop(); s.catalog.dropTempView(name); () }
       coordinatorWarmed.add(s)

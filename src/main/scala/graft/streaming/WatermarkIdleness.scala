@@ -37,9 +37,7 @@ object WatermarkIdleness {
     "q_watermark_idle",
     (s, dir) => graft.streaming.StreamingOps.withStatePartitions(s, 8) {
       import s.implicits._
-      val prev = s.conf.getOption(PolicyKey)
-      s.conf.set(PolicyKey, "max")
-      try {
+      StreamingOps.withConf(s, PolicyKey, "max") {
         val base = Tables.scratch(
           s"wm-idle/${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
         val ev = Tables.t(s, dir, "events")
@@ -63,9 +61,6 @@ object WatermarkIdleness {
           .select(unix_timestamp($"window.start").as("wstart"), $"cnt")
         StreamingOps.runToMemory(s, agg, "append", "graft_wm_idle")
           .orderBy($"wstart")
-      } finally prev match {
-        case Some(v) => s.conf.set(PolicyKey, v)
-        case None => s.conf.unset(PolicyKey)
       }
     },
     // append emits exactly the windows the final combined watermark closed;

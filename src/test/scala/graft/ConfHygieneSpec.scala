@@ -25,4 +25,14 @@ class ConfHygieneSpec extends GraftSpec {
     assert(spark.conf.get(key) == before,
       s"shuffle partitions leaked: ${spark.conf.get(key)} (was $before)")
   }
+
+  test("streaming queries restore spark.sql.streaming.checkpointFileManagerClass") {
+    val key = graft.streaming.LocalCheckpointFileManager.ClassKey
+    val before = spark.conf.getOption(key)
+    for (q <- Seq("q_stream_tumble", "q_cdc_upsert_door")) {
+      assert(SparkEntry.queries(q)(spark, sfDir).count() > 0)
+      assert(spark.conf.getOption(key) == before,
+        s"$q leaked the checkpoint file manager: ${spark.conf.getOption(key)} (was $before)")
+    }
+  }
 }
