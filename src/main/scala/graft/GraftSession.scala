@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * catalogs and function catalog in one call).
   *
   * What it installs:
-  *  - SQL functions hash_code / dot_product / cosine_similarity
+  *  - SQL functions hash_code / dot_product / cosine_similarity / proctime
+  *  - the Flink group windows TUMBLE / HOP / SESSION and their
+  *    `_START` / `_END` auxiliaries
   *  - the SplitDistinctAggRule optimizer rule (off until
   *    spark.graft.splitDistinctAgg.enabled=true)
   *  - engine defaults: UTC session time zone, AQE on (Spark 4 default kept

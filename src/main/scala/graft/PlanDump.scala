@@ -12,8 +12,8 @@ import java.nio.file.{Files, Paths}
   *
   * Streaming queries: the returned DataFrame is the post-run materialized
   * result (memory-sink scan), so the captured plan covers the batch tail;
-  * the streaming micro-batch breakdown is captured separately via
-  * Scratch/streamprof-style progress dumps.
+  * the per-micro-batch split comes from the traced benchmark run
+  * (`perfbench/run.py --trace 1`).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

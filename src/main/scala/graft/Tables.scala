@@ -38,8 +38,10 @@ object Tables {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
+  // keyed on the session itself: SparkSession keeps Object's identity
+  // equals/hashCode, so one session can never hit another's slot
   private val tableCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String), (SparkSession, DataFrame)]()
+    (SparkSession, String, String), DataFrame]()
 
   /** Raw schema, memoized per (dir, table) — r21: file-stream sources need
     * an explicit schema, and every streaming query previously paid a fresh
@@ -66,12 +68,10 @@ object Tables {
     * resolved tables instead of re-resolving per query. Plans are immutable,
     * so sharing one DataFrame across queries is safe. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // drop entries of stopped sessions: their plans are unusable, and an
-    // identityHashCode reused by a new session must not hit a stale slot
-    tableCache.values.removeIf(_._1.sparkContext.isStopped)
-    tableCache.computeIfAbsent(
-      (System.identityHashCode(spark), dir, name),
-      _ => (spark, normalize(name, raw(spark, dir, name))))._2
+    // drop entries of stopped sessions: their plans are unusable
+    tableCache.keySet.removeIf(_._1.sparkContext.isStopped)
+    tableCache.computeIfAbsent((spark, dir, name),
+      _ => normalize(name, raw(spark, dir, name)))
   }
 
   def normalize(name: String, df: DataFrame): DataFrame =

@@ -21,12 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     [[graft.streaming.DedupSql]] keep-first/last keyed aggregate (the
   *     StreamExecDeduplicateRule recognition). Near-miss text (e.g.
   *     `rn = 2`) falls through — it is ordinary, legal window SQL.
-  *  4. Everything else: the TEXT rewrites compose — group windows
-  *     ([[GroupWindowSql]]: TUMBLE/HOP/SESSION + `_START`/`_END`) and
-  *     lateral correlates ([[LateralSql]]: `LATERAL TABLE(f(x))`) are both
-  *     string→string and no-ops when their idiom is absent, so a statement
-  *     MIXING them (a windowed aggregate over a lateral expansion) lowers in
-  *     one pass — then `spark.sql` plans the result inside Catalyst.
+  *  4. Everything else: lateral correlates ([[LateralSql]]:
+  *     `LATERAL TABLE(f(x))`) are rewritten as text (a no-op when absent),
+  *     then `spark.sql` plans the statement inside Catalyst with graft's
+  *     session functions registered — group windows ([[GroupWindowSql]]:
+  *     TUMBLE/HOP/SESSION + `_START`/`_END`) among them — so a statement
+  *     MIXING the two (a windowed aggregate over a lateral expansion) needs
+  *     no extra step.
   *
   * This is exactly the distance the five separate doors couldn't cover: a
   * user pasting reference SQL that combines idioms needs no knowledge of
@@ -1012,11 +1013,8 @@ object GraftSql {
       // the same grammar stays with LateralSql below, exactly the
       // reference's function-catalog kind check at Correlate planning time
       TemporalFunction.sql(spark, text)
-    else graft.streaming.DedupSql.tryDedup(spark, text).getOrElse {
-      // composable text rewrites — each a no-op when its idiom is absent
-      val lowered = LateralSql.rewrite(GroupWindowSql.rewrite(text))
-      spark.sql(lowered)
-    }
+    else graft.streaming.DedupSql.tryDedup(spark, text).getOrElse(
+      org.apache.spark.sql.graft.GraftSqlFunctions.sql(spark, LateralSql.rewrite(text)))
   }
 
   /** Execute one INSERT against a registered sink; returns (sink read-back,

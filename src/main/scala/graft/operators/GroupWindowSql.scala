@@ -2,135 +2,23 @@ package graft.operators
 
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftSqlFunctions
 
 /** Flink group-window SQL surface (reference FlinkSqlOperatorTable.java:778–826
   * — TUMBLE/HOP/SESSION group windows + their `_START`/`_END` auxiliary
-  * functions; planner `StreamExecGroupWindowAggregate.scala:44`): recognizes
-  * the reference's `GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)` syntax and
-  * lowers it onto Spark's native `window()` / `session_window()` table
-  * expressions — so the whole query stays inside Catalyst (codegen'd window
-  * assignment, partial aggregation, AQE), exactly like a hand-written
-  * DataFrame window aggregate.
-  *
-  * Arg order note: Flink is HOP(time, slide, size); Spark is
-  * window(time, size, slide) — the rewrite swaps them.
+  * functions; planner `StreamExecGroupWindowAggregate.scala:44`): the
+  * reference's `GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)` syntax runs as
+  * written. The nine names are session functions
+  * ([[org.apache.spark.sql.graft.GraftSqlFunctions]]) that build Spark's
+  * native `window()` / `session_window()` expressions, so the whole query
+  * stays inside Catalyst (codegen'd window assignment, partial aggregation,
+  * AQE), exactly like a hand-written DataFrame window aggregate.
   */
 object GroupWindowSql {
 
-  private val Units = Map(
-    "SECOND" -> "seconds", "MINUTE" -> "minutes",
-    "HOUR" -> "hours", "DAY" -> "days")
-
-  // plural unit tolerated (users write MINUTES as often as MINUTE)
-  private val IntervalRe =
-    """(?i)INTERVAL\s+'(\d+)'\s+(SECOND|MINUTE|HOUR|DAY)S?""".r
-
-  private def dur(interval: String): String = interval match {
-    case IntervalRe(n, u) => s"$n ${Units(u.toUpperCase)}"
-    case other => throw new IllegalArgumentException(
-      s"unsupported interval literal: $other")
-  }
-
-  private val I = """INTERVAL\s+'\d+'\s+(?:SECOND|MINUTE|HOUR|DAY)S?"""
-  private val Col = """([a-zA-Z_][\w.]*)"""
-
-  // auxiliaries first (TUMBLE_START would otherwise match the bare TUMBLE)
-  private val TumbleAux = s"""(?i)TUMBLE_(START|END)\\(\\s*$Col\\s*,\\s*$I\\s*\\)""".r
-  private val HopAux = s"""(?i)HOP_(START|END)\\(\\s*$Col\\s*,\\s*$I\\s*,\\s*$I\\s*\\)""".r
-  private val SessionAux = s"""(?i)SESSION_(START|END)\\(\\s*$Col\\s*,\\s*$I\\s*\\)""".r
-  private val Tumble = s"""(?i)TUMBLE\\(\\s*$Col\\s*,\\s*($I)\\s*\\)""".r
-  private val Hop = s"""(?i)HOP\\(\\s*$Col\\s*,\\s*($I)\\s*,\\s*($I)\\s*\\)""".r
-  private val Session = s"""(?i)SESSION\\(\\s*$Col\\s*,\\s*($I)\\s*\\)""".r
-
-  // capture variants for auxiliary validation (the lowering regexes above
-  // deliberately don't capture the args they replace)
-  private val TumbleAuxV = s"""(?i)TUMBLE_(?:START|END)\\(\\s*$Col\\s*,\\s*($I)\\s*\\)""".r
-  private val HopAuxV = s"""(?i)HOP_(?:START|END)\\(\\s*$Col\\s*,\\s*($I)\\s*,\\s*($I)\\s*\\)""".r
-  private val SessionAuxV = s"""(?i)SESSION_(?:START|END)\\(\\s*$Col\\s*,\\s*($I)\\s*\\)""".r
-
-  /** Split at top-level UNION [ALL] boundaries (paren depth 0, outside
-    * string literals) so each branch's auxiliaries validate against ITS
-    * windows, not a window declared only in a sibling branch — the
-    * reference's per-scope SqlValidator matching. Windows inside a
-    * branch's subqueries still share that branch's scope (full per-SELECT
-    * scoping needs a real parser). */
-  private def topLevelSegments(sql: String): List[String] = {
-    // scan the comment-and-literal-blanked text (GraftSql's shared lexer):
-    // an apostrophe inside a comment, or a paren/UNION inside a string,
-    // must not corrupt the depth count or seed a phantom cut
-    val blanked = GraftSql.blankCommentsAndLiterals(sql)
-    val ms = "(?i)\\bUNION\\b(?:\\s+ALL\\b)?".r.findAllMatchIn(blanked).toList
-    val cuts = ms.filter { m =>
-      var depth = 0; var i = 0
-      while (i < m.start) {
-        blanked.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ => ()
-        }
-        i += 1
-      }
-      depth == 0
-    }
-    if (cuts.isEmpty) List(sql)
-    else {
-      val starts = 0 +: cuts.map(_.end)
-      val ends = cuts.map(_.start) :+ sql.length
-      starts.zip(ends).map { case (s, e) => sql.substring(s, e) }
-    }
-  }
-
-  /** The reference validates that every auxiliary's (column, interval…)
-    * EQUALS the grouped window's (SqlValidator window matching); silently
-    * rewriting a mismatched aux to `window.start` would present one
-    * window's bounds as another's. Validation is per top-level UNION
-    * branch (see [[topLevelSegments]]). */
-  private def validateAux(fullSql: String): Unit =
-    topLevelSegments(fullSql).foreach(validateAuxSegment)
-
-  private def validateAuxSegment(sql: String): Unit = {
-    def eqc(a: String, b: String) = a.equalsIgnoreCase(b)
-    val tumbles = Tumble.findAllMatchIn(sql).map(m => (m.group(1), dur(m.group(2)))).toList
-    val hops = Hop.findAllMatchIn(sql)
-      .map(m => (m.group(1), dur(m.group(2)), dur(m.group(3)))).toList
-    val sessions = Session.findAllMatchIn(sql).map(m => (m.group(1), dur(m.group(2)))).toList
-    TumbleAuxV.findAllMatchIn(sql).foreach { m =>
-      val ok = tumbles.exists { case (c, d) => eqc(c, m.group(1)) && d == dur(m.group(2)) }
-      require(ok, s"TUMBLE_START/END(${m.group(1)}, ${m.group(2)}) does not match " +
-        s"any grouped window ${if (tumbles.isEmpty) "(none)" else tumbles.mkString(", ")} — " +
-        "the reference rejects mismatched window auxiliaries")
-    }
-    HopAuxV.findAllMatchIn(sql).foreach { m =>
-      val ok = hops.exists { case (c, sl, sz) =>
-        eqc(c, m.group(1)) && sl == dur(m.group(2)) && sz == dur(m.group(3)) }
-      require(ok, s"HOP_START/END(${m.group(1)}, …) does not match any " +
-        s"grouped window ${if (hops.isEmpty) "(none)" else hops.mkString(", ")}")
-    }
-    SessionAuxV.findAllMatchIn(sql).foreach { m =>
-      val ok = sessions.exists { case (c, g) => eqc(c, m.group(1)) && g == dur(m.group(2)) }
-      require(ok, s"SESSION_START/END(${m.group(1)}, ${m.group(2)}) does not " +
-        s"match any grouped window ${if (sessions.isEmpty) "(none)" else sessions.mkString(", ")}")
-    }
-  }
-
-  /** Rewrite reference group-window SQL text into Spark SQL. */
-  def rewrite(sql: String): String = {
-    validateAux(sql)
-    var out = sql
-    out = TumbleAux.replaceAllIn(out, m => s"window.${m.group(1).toLowerCase}")
-    out = HopAux.replaceAllIn(out, m => s"window.${m.group(1).toLowerCase}")
-    out = SessionAux.replaceAllIn(out, m => s"session_window.${m.group(1).toLowerCase}")
-    out = Tumble.replaceAllIn(out, m => s"window(${m.group(1)}, '${dur(m.group(2))}')")
-    // Flink HOP(time, slide, size) -> Spark window(time, size, slide)
-    out = Hop.replaceAllIn(out,
-      m => s"window(${m.group(1)}, '${dur(m.group(3))}', '${dur(m.group(2))}')")
-    out = Session.replaceAllIn(out, m => s"session_window(${m.group(1)}, '${dur(m.group(2))}')")
-    out
-  }
-
   def run(spark: SparkSession, dir: String, sql: String): DataFrame = {
     Tables.registerAll(spark, dir)
-    spark.sql(rewrite(sql))
+    GraftSqlFunctions.sql(spark, sql)
   }
 
   /** q_group_window_sql: the reference's TUMBLE syntax verbatim; same answer
@@ -189,20 +77,20 @@ object GroupWindowSql {
            |FROM sess GROUP BY user_id, sid ORDER BY user_id, sess_start""".stripMargin))
 
   /** q_group_window_sql_stream: the same TUMBLE text against a STREAMING
-    * view — the reference's primary mode for group windows. The rewritten
-    * SQL plans a streaming window aggregate (complete mode over the bounded
-    * replay), bit-identical to the batch twin's oracle. */
+    * view — the reference's primary mode for group windows. It plans a
+    * streaming window aggregate (complete mode over the bounded replay),
+    * bit-identical to the batch twin's oracle. */
   val qTumbleSqlStream: Q = Q(
     "q_group_window_sql_stream",
     (s, dir) => graft.streaming.StreamingOps.withStatePartitions(s, 8) {
       import s.implicits._
       graft.streaming.StreamingOps.streamTable(s, dir, "events")
         .createOrReplaceTempView("events_stream")
-      val agg = s.sql(rewrite(
+      val agg = GraftSqlFunctions.sql(s,
         """SELECT unix_timestamp(TUMBLE_START(ts, INTERVAL '5' MINUTE)) AS wstart,
           |       event_type, count(*) AS cnt, round(sum(value), 2) AS total
           |FROM events_stream
-          |GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE), event_type""".stripMargin))
+          |GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE), event_type""".stripMargin)
       graft.streaming.StreamingOps
         .runToMemory(s, agg, "complete", "graft_gw_sql_stream")
         .orderBy($"wstart", $"event_type")
@@ -219,11 +107,11 @@ object GroupWindowSql {
       import s.implicits._
       graft.streaming.StreamingOps.streamTable(s, dir, "events")
         .createOrReplaceTempView("events_stream_hop")
-      val agg = s.sql(rewrite(
+      val agg = GraftSqlFunctions.sql(s,
         """SELECT unix_timestamp(HOP_START(ts, INTERVAL '5' MINUTE, INTERVAL '10' MINUTE)) AS wstart,
           |       event_type, count(*) AS cnt
           |FROM events_stream_hop
-          |GROUP BY HOP(ts, INTERVAL '5' MINUTE, INTERVAL '10' MINUTE), event_type""".stripMargin))
+          |GROUP BY HOP(ts, INTERVAL '5' MINUTE, INTERVAL '10' MINUTE), event_type""".stripMargin)
       graft.streaming.StreamingOps
         .runToMemory(s, agg, "complete", "graft_gw_sql_stream_hop")
         .orderBy($"wstart", $"event_type")
@@ -244,11 +132,11 @@ object GroupWindowSql {
       import s.implicits._
       graft.streaming.StreamingOps.streamTable(s, dir, "events")
         .createOrReplaceTempView("events_stream_sess")
-      val agg = s.sql(rewrite(
+      val agg = GraftSqlFunctions.sql(s,
         """SELECT unix_timestamp(SESSION_START(ts, INTERVAL '30' MINUTE)) AS sess_start,
           |       user_id, count(*) AS cnt, round(sum(value), 2) AS total
           |FROM events_stream_sess
-          |GROUP BY SESSION(ts, INTERVAL '30' MINUTE), user_id""".stripMargin))
+          |GROUP BY SESSION(ts, INTERVAL '30' MINUTE), user_id""".stripMargin)
       graft.streaming.StreamingOps
         .runToMemory(s, agg, "complete", "graft_gw_sql_stream_sess")
         .orderBy($"user_id", $"sess_start")

@@ -13,22 +13,20 @@ import org.apache.spark.storage.StorageLevel
   * analogue: first consumer computes and persists (memory, disk spill),
   * later consumers reuse the same persisted plan.
   *
-  * Keyed by (session UUID, logical name) so a fresh session (tests, new
-  * driver run) never sees another session's plans; entries owned by stopped
-  * sessions are dropped on the next call.
+  * Keyed by (session, logical name) — SparkSession keeps Object's identity
+  * equals/hashCode — so a fresh session (tests, new driver run) never sees
+  * another session's plans; entries owned by stopped sessions are dropped
+  * on the next call.
   */
 object Materialized {
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (SparkSession, DataFrame)]()
-
-  private def sessionId(spark: SparkSession): String =
-    spark.sparkContext.applicationId + "/" + System.identityHashCode(spark)
+    (SparkSession, String), DataFrame]()
 
   def of(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     // evict plans owned by stopped sessions: their cached blocks died with
     // the context, keeping the refs would only leak plans
-    cache.values.removeIf(_._1.sparkContext.isStopped)
+    cache.keySet.removeIf(_._1.sparkContext.isStopped)
     // NOT computeIfAbsent: derived entries build on top of other entries
     // (shinglesCapped -> shingles), and a nested computeIfAbsent on the
     // same map throws IllegalStateException("Recursive update") whenever
@@ -36,10 +34,10 @@ object Materialized {
     // bench warm-ups always touched the base relations first. get +
     // putIfAbsent keeps memoization (worst case one redundant build races,
     // the loser's persist is unwound) and is reentrancy-safe.
-    val k = (sessionId(spark), key)
+    val k = (spark, key)
     val hit = cache.get(k)
-    if (hit != null) return hit._2
-    val built = (spark, build.persist(StorageLevel.MEMORY_AND_DISK))
+    if (hit != null) return hit
+    val built = build.persist(StorageLevel.MEMORY_AND_DISK)
     val prev = cache.putIfAbsent(k, built)
     // when the putIfAbsent races, do NOT unpersist the loser: CacheManager
     // keys cached blocks by the ANALYZED PLAN, and both builds of the same
@@ -47,10 +45,10 @@ object Materialized {
     // winner's entry too, silently un-caching the surviving DataFrame. The
     // loser's persist was a no-op against the already-registered plan, so
     // dropping the reference leaks nothing.
-    if (prev != null) prev._2 else built._2
+    if (prev != null) prev else built
   }
 
   /** Drop one session's entries (test isolation). */
   def clear(spark: SparkSession): Unit =
-    cache.keySet.removeIf { case (sid, _) => sid == sessionId(spark) }
+    cache.keySet.removeIf(_._1 eq spark)
 }

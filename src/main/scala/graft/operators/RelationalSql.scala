@@ -246,10 +246,11 @@ object RelationalSql {
     * rows fall below the WHERE guard — the loop-unrolling twin of
     * `IterateOps.iterate`. */
   /** One cloned session per (parent session, input dir), carrying the
-    * raised recursion valve — see [[qRecursiveCte]]. Entries of stopped
-    * contexts are dropped like Tables' plan cache. */
+    * raised recursion valve — see [[qRecursiveCte]]. Keyed on the parent
+    * itself (identity equals/hashCode); entries of stopped contexts are
+    * dropped like Tables' plan cache. */
   private val recursionSessions = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), org.apache.spark.sql.SparkSession]()
+    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.SparkSession]()
 
   val qRecursiveCte: Q = Q(
     "q_recursive_cte",
@@ -276,22 +277,21 @@ object RelationalSql {
       // session's valve is untouched, and the write-then-read disappears —
       // the plan is the recursion itself, distributed and heap-flat.
       val sub = {
-        recursionSessions.values.removeIf(_.sparkContext.isStopped)
-        recursionSessions.computeIfAbsent(
-          (System.identityHashCode(s), dir), _ => {
-            val ns = s.newSession()
-            // newSession starts from the context defaults, not the parent's
-            // runtime conf — copy every modifiable conf so the recursion
-            // plans under the same session posture (timezone, ANSI, AQE,
-            // shuffle partitions) as every other query in the run
-            s.conf.getAll.foreach { case (k, v) =>
-              if (ns.conf.isModifiable(k)) ns.conf.set(k, v)
-            }
-            val inputRows = Tables.t(ns, dir, "lineitem").count()
-            ns.conf.set("spark.sql.cteRecursionRowLimit",
-              math.max(20000000L, inputRows * 8L).toString)
-            ns
-          })
+        recursionSessions.keySet.removeIf(_._1.sparkContext.isStopped)
+        recursionSessions.computeIfAbsent((s, dir), _ => {
+          val ns = s.newSession()
+          // newSession starts from the context defaults, not the parent's
+          // runtime conf — copy every modifiable conf so the recursion
+          // plans under the same session posture (timezone, ANSI, AQE,
+          // shuffle partitions) as every other query in the run
+          s.conf.getAll.foreach { case (k, v) =>
+            if (ns.conf.isModifiable(k)) ns.conf.set(k, v)
+          }
+          val inputRows = Tables.t(ns, dir, "lineitem").count()
+          ns.conf.set("spark.sql.cteRecursionRowLimit",
+            math.max(20000000L, inputRows * 8L).toString)
+          ns
+        })
       }
       Tables.registerAll(sub, dir)
       sub.sql("""WITH RECURSIVE it AS (

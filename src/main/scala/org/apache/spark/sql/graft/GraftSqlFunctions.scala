@@ -2,8 +2,15 @@
  * FunctionRegistry) — see JvmHashCode.scala. */
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, Multiply, Sqrt}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, GetStructField, Literal,
+  Multiply, SessionWindow, Sqrt, TimeWindow}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.types.{CalendarIntervalType, DayTimeIntervalType, YearMonthIntervalType}
+import org.apache.spark.unsafe.types.CalendarInterval
 
 /** Registers graft's native expressions as SQL functions on an existing
   * session (works on any session, including one we didn't build — the
@@ -16,17 +23,90 @@ object GraftSqlFunctions {
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "hash_code", (e: Seq[Expression]) => JvmHashCodeExpression(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "dot_product", (e: Seq[Expression]) => DotProduct(e(0), e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "proctime", (_: Seq[Expression]) => ProcTimeExpression(), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "cosine_similarity", (e: Seq[Expression]) => {
-        Divide(DotProduct(e(0), e(1)),
-          Multiply(Sqrt(DotProduct(e(0), e(0))), Sqrt(DotProduct(e(1), e(1)))))
-      }, "scala_udf")
+    // only what is missing: every door statement lands here, and replacing a
+    // function logs a WARN per name; a user's CREATE FUNCTION of one of
+    // these names stays in place
+    def define(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    define("hash_code", e => JvmHashCodeExpression(e.head))
+    define("dot_product", e => DotProduct(e(0), e(1)))
+    define("proctime", _ => ProcTimeExpression())
+    define("cosine_similarity", e =>
+      Divide(DotProduct(e(0), e(1)),
+        Multiply(Sqrt(DotProduct(e(0), e(0))), Sqrt(DotProduct(e(1), e(1))))))
+    for (w <- GroupWindows) {
+      define(w, e => groupWindow(w, e))
+      define(s"${w}_start", e => GetStructField(groupWindow(w, e), 0, Some("start")))
+      define(s"${w}_end", e => GetStructField(groupWindow(w, e), 1, Some("end")))
+    }
+  }
+
+  /** Flink's group windows (reference FlinkSqlOperatorTable.java:778–826:
+    * TUMBLE/HOP/SESSION and their `_START`/`_END` auxiliaries) build Spark's
+    * own window expressions, so the analyzer's ResolveTimeWindows /
+    * ResolveSessionWindows plan them exactly like `window()` /
+    * `session_window()`, and reject two different windows in one SELECT. */
+  private val GroupWindows = Seq("tumble", "hop", "session")
+
+  private def groupWindow(name: String, args: Seq[Expression]): Expression =
+    (name, args) match {
+      case ("tumble", Seq(ts, size)) => TimeWindow(ts, micros(size), micros(size), 0L)
+      // Flink is HOP(time, slide, size); TimeWindow takes size before slide
+      case ("hop", Seq(ts, slide, size)) => TimeWindow(ts, micros(size), micros(slide), 0L)
+      // SessionWindow accepts only a CalendarIntervalType gap
+      case ("session", Seq(ts, gap)) =>
+        SessionWindow(ts, Literal(new CalendarInterval(0, 0, micros(gap)), CalendarIntervalType))
+      case _ => throw new IllegalArgumentException(
+        s"${name.toUpperCase} with ${args.length} arguments: the group windows are " +
+          "TUMBLE(time, size), HOP(time, slide, size) and SESSION(time, gap)")
+    }
+
+  private def micros(interval: Expression): Long = interval match {
+    case Literal(us: Long, _: DayTimeIntervalType) => us
+    case Literal(_, _: YearMonthIntervalType) => throw new IllegalArgumentException(
+      s"group window interval ${interval.sql} is in YEAR/MONTH units, which have " +
+        "no fixed length: use SECOND, MINUTE, HOUR or DAY")
+    case other => throw new IllegalArgumentException(
+      s"group window interval must be an INTERVAL literal, got ${other.sql}")
+  }
+
+  private val Auxiliaries: Map[String, String] =
+    GroupWindows.flatMap(w => Seq(s"${w}_start" -> w, s"${w}_end" -> w)).toMap
+
+  /** `spark.sql` for text that may use the group-window functions: registers
+    * graft's functions on `spark` (callers such as a catalog restore on a
+    * `newSession()` never called [[register]]), then plans `text`. Before
+    * that, the one Flink rule Spark lacks is checked on the parsed plan: an
+    * auxiliary must sit in an Aggregate grouped by a window of its kind —
+    * Spark alone would assign each row its own window. */
+  def sql(spark: SparkSession, text: String): DataFrame = {
+    register(spark)
+    // text the parser rejects is spark.sql's to report
+    val parsed =
+      try Some(spark.sessionState.sqlParser.parsePlan(text))
+      catch { case _: ParseException => None }
+    parsed.foreach(requireGroupedAuxiliaries)
+    spark.sql(text)
+  }
+
+  private def requireGroupedAuxiliaries(plan: LogicalPlan): Unit = {
+    def calls(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {
+      case f: UnresolvedFunction if f.nameParts.length == 1 => f.nameParts.head.toLowerCase
+    })
+    val grouped = plan match {
+      case a: Aggregate => calls(a.groupingExpressions).toSet
+      case _ => Set.empty[String]
+    }
+    calls(plan.expressions).filter(Auxiliaries.contains).foreach { aux =>
+      val w = Auxiliaries(aux)
+      require(grouped(w), s"${aux.toUpperCase} outside a query grouped by " +
+        s"${w.toUpperCase}(…): the reference rejects a window auxiliary without " +
+        "its grouped window")
+    }
+    // CTE definitions are inner children; subquery expressions hold plans
+    (plan.children ++ plan.innerChildren.collect { case p: LogicalPlan => p } ++
+      plan.subqueries).foreach(requireGroupedAuxiliaries)
   }
 
   /** `CREATE FUNCTION name AS 'impl'` support (reference

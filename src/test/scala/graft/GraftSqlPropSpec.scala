@@ -106,29 +106,33 @@ class GraftSqlPropSpec extends GraftSpec {
     }, n = 40)
   }
 
-  test("GroupWindowSql.rewrite: identity on idiom-free SQL") {
-    holds(Prop.forAll(statement) { s =>
-      // statements from the generator never contain TUMBLE/HOP/SESSION
-      // calls, so the rewrite must be byte-identical
-      graft.operators.GroupWindowSql.rewrite(s) == s
-    })
-  }
-
-  test("GroupWindowSql.rewrite: lowered text carries no reference window calls") {
+  test("group windows: the Flink spelling plans like the window() spelling") {
+    val s0 = spark
+    import s0.implicits._
+    Seq(java.sql.Timestamp.valueOf("2020-01-01 00:00:00")).toDF("ts")
+      .createOrReplaceTempView("gw_prop")
     val unit = Gen.oneOf("SECOND", "MINUTE", "HOUR", "DAY")
     val g = for {
       n <- Gen.choose(1, 120); u <- unit
-      m <- Gen.choose(1, 120); u2 <- unit
-    } yield s"""SELECT TUMBLE_START(ts, INTERVAL '$n' $u) AS w, count(*)
-               |FROM t GROUP BY TUMBLE(ts, INTERVAL '$n' $u),
-               |HOP(ts2, INTERVAL '$m' $u2, INTERVAL '$n' $u),
-               |SESSION(ts3, INTERVAL '$m' $u2)""".stripMargin
-    holds(Prop.forAll(g) { s =>
-      val out = graft.operators.GroupWindowSql.rewrite(s).toUpperCase
-      !out.contains("TUMBLE") && !out.contains("HOP(") &&
-        !out.contains("SESSION(") && out.contains("WINDOW(") &&
-        out.contains("SESSION_WINDOW(")
-    }, n = 150)
+      m <- Gen.choose(1, n) // a HOP slide may not exceed its size
+      kind <- Gen.oneOf("TUMBLE", "HOP", "SESSION")
+    } yield {
+      val (size, slide) = (s"INTERVAL '$n' $u", s"INTERVAL '$m' $u")
+      val (args, window) = kind match {
+        case "TUMBLE" => (s"ts, $size", s"window(ts, '$n $u')")
+        case "HOP" => (s"ts, $slide, $size", s"window(ts, '$n $u', '$m $u')")
+        case _ => (s"ts, $size", s"session_window(ts, '$n $u')")
+      }
+      val col = if (kind == "SESSION") "session_window" else "window"
+      (s"SELECT ${kind}_START($args) AS w, count(*) AS c FROM gw_prop GROUP BY $kind($args)",
+        s"SELECT $col.start AS w, count(*) AS c FROM gw_prop GROUP BY $window")
+    }
+    def optimized(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.canonicalized
+    holds(Prop.forAll(g) { case (flinkText, sparkText) =>
+      optimized(GraftSql.run(spark, flinkText)) ==
+        optimized(spark.sql(sparkText))
+    }, n = 60)
   }
 
   test("CREATE/USE/DROP CATALOG: any case/whitespace spelling round-trips") {

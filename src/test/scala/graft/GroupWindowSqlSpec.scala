@@ -1,83 +1,130 @@
 package graft
 
-import graft.operators.GroupWindowSql.rewrite
+import graft.operators.GraftSql
+import org.apache.spark.sql.DataFrame
 
-/** Group-window SQL lowering (reference FlinkSqlOperatorTable TUMBLE/HOP/
-  * SESSION + auxiliaries) — rewrite-level checks; end-to-end answers are
-  * oracle-gated (q_group_window_sql*). */
+/** Flink group windows (reference FlinkSqlOperatorTable TUMBLE/HOP/SESSION +
+  * auxiliaries) as session functions — analysis-level checks on small
+  * in-memory views: each Flink spelling must optimize to the same plan as
+  * its `window()` / `session_window()` spelling, and mismatched windows must
+  * fail analysis. End-to-end answers are oracle-gated (q_group_window_sql*). */
 class GroupWindowSqlSpec extends GraftSpec {
 
+  private lazy val views: Unit = {
+    val s = spark
+    import s.implicits._
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    Seq((ts("2020-01-01 00:01:00"), ts("2020-01-01 00:02:00"), 1.0),
+        (ts("2020-01-01 00:07:00"), ts("2020-01-01 00:08:00"), 2.0))
+      .toDF("ts", "other_ts", "v").createOrReplaceTempView("gw")
+    Seq(ts("2020-01-01 00:03:00")).toDF("ts").createOrReplaceTempView("gw_a")
+    Seq(ts("2020-01-01 00:09:00")).toDF("ts").createOrReplaceTempView("gw_b")
+  }
+
+  private def flink(text: String): DataFrame = { views; GraftSql.run(spark, text) }
+
+  private def assertSamePlan(flinkText: String, sparkText: String): Unit = {
+    val got = flink(flinkText).queryExecution.optimizedPlan
+    val want = spark.sql(sparkText).queryExecution.optimizedPlan
+    assert(got.canonicalized == want.canonicalized, s"\n$got\nvs\n$want")
+  }
+
+  private def rejected(text: String): String =
+    intercept[Exception](flink(text).queryExecution.assertAnalyzed()).getMessage
+
+  private val MultipleWindows = "Multiple time/session window expressions"
+
   test("TUMBLE lowers to window(), auxiliaries to window.start/end") {
-    val out = rewrite(
-      "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE), TUMBLE_END(ts, INTERVAL '5' MINUTE) " +
-        "FROM e GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)")
-    assert(out ==
-      "SELECT window.start, window.end FROM e GROUP BY window(ts, '5 minutes')")
+    assertSamePlan(
+      "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) AS s, TUMBLE_END(ts, INTERVAL '5' MINUTE) AS e, " +
+        "count(*) AS c FROM gw GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)",
+      "SELECT window.start AS s, window.end AS e, count(*) AS c FROM gw " +
+        "GROUP BY window(ts, '5 minutes')")
   }
 
   test("HOP swaps Flink slide-size order into Spark size-slide") {
-    val out = rewrite("GROUP BY HOP(ts, INTERVAL '1' MINUTE, INTERVAL '10' MINUTE)")
-    assert(out == "GROUP BY window(ts, '10 minutes', '1 minutes')")
+    assertSamePlan(
+      "SELECT HOP_END(ts, INTERVAL '1' MINUTE, INTERVAL '10' MINUTE) AS e, sum(v) AS t " +
+        "FROM gw GROUP BY HOP(ts, INTERVAL '1' MINUTE, INTERVAL '10' MINUTE)",
+      "SELECT window.end AS e, sum(v) AS t FROM gw GROUP BY window(ts, '10 minutes', '1 minutes')")
   }
 
-  test("SESSION lowers to session_window; unrecognized spec passes through") {
-    assert(rewrite("GROUP BY SESSION(ts, INTERVAL '30' MINUTE)") ==
-      "GROUP BY session_window(ts, '30 minutes')")
-    // an unsupported unit is left for spark.sql to reject (unknown TUMBLE
-    // function) rather than silently partially rewritten
-    val untouched = "GROUP BY TUMBLE(ts, INTERVAL '1' YEAR)"
-    assert(rewrite(untouched) == untouched)
+  test("SESSION lowers to session_window; a YEAR/MONTH interval fails loudly") {
+    assertSamePlan(
+      "SELECT SESSION_START(ts, INTERVAL '30' MINUTE) AS s, count(*) AS c " +
+        "FROM gw GROUP BY SESSION(ts, INTERVAL '30' MINUTE)",
+      "SELECT session_window.start AS s, count(*) AS c FROM gw " +
+        "GROUP BY session_window(ts, '30 minutes')")
+    val msg = rejected("SELECT count(*) FROM gw GROUP BY TUMBLE(ts, INTERVAL '1' YEAR)")
+    assert(msg.contains("YEAR/MONTH"), msg)
   }
 
   test("mismatched window auxiliaries are rejected like the reference's validator") {
-    val e = intercept[IllegalArgumentException] {
-      rewrite("SELECT TUMBLE_START(ts, INTERVAL '1' HOUR) " +
-        "FROM e GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)")
-    }
-    assert(e.getMessage.contains("does not match"), e.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      rewrite("SELECT TUMBLE_START(other_ts, INTERVAL '5' MINUTE) " +
-        "FROM e GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)")
-    }
-    assert(e2.getMessage.contains("does not match"), e2.getMessage)
+    val msg = rejected("SELECT TUMBLE_START(ts, INTERVAL '1' HOUR) " +
+      "FROM gw GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)")
+    assert(msg.contains(MultipleWindows), msg)
+    val msg2 = rejected("SELECT TUMBLE_START(other_ts, INTERVAL '5' MINUTE) " +
+      "FROM gw GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)")
+    assert(msg2.contains(MultipleWindows), msg2)
   }
 
   test("a statement with TWO different grouped windows accepts each window's own auxiliaries") {
-    // UNION ALL of two differently-windowed subqueries: each TUMBLE_START
-    // matches SOME grouped window in the statement — first-window-only
-    // validation spuriously rejected the second subquery's auxiliaries
-    val out = rewrite(
-      "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) FROM e GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE) " +
+    assertSamePlan(
+      "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) AS s FROM gw GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE) " +
         "UNION ALL " +
-        "SELECT TUMBLE_START(ts, INTERVAL '10' MINUTE) FROM e GROUP BY TUMBLE(ts, INTERVAL '10' MINUTE)")
-    assert(out ==
-      "SELECT window.start FROM e GROUP BY window(ts, '5 minutes') " +
+        "SELECT TUMBLE_START(ts, INTERVAL '10' MINUTE) AS s FROM gw GROUP BY TUMBLE(ts, INTERVAL '10' MINUTE)",
+      "SELECT window.start AS s FROM gw GROUP BY window(ts, '5 minutes') " +
         "UNION ALL " +
-        "SELECT window.start FROM e GROUP BY window(ts, '10 minutes')")
+        "SELECT window.start AS s FROM gw GROUP BY window(ts, '10 minutes')")
     // an auxiliary matching NO grouped window still rejects
-    intercept[IllegalArgumentException] {
-      rewrite("SELECT TUMBLE_START(ts, INTERVAL '7' MINUTE) FROM e " +
-        "GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)")
-    }
+    val msg = rejected("SELECT TUMBLE_START(ts, INTERVAL '7' MINUTE) FROM gw " +
+      "GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)")
+    assert(msg.contains(MultipleWindows), msg)
   }
 
   test("auxiliary validation scopes per top-level UNION branch") {
-    // the aux in branch 2 matches only branch 1's window — any-window
-    // matching across the whole statement would accept this; per-scope
-    // validation (the reference's) rejects it
-    val e = intercept[IllegalArgumentException] {
-      rewrite(
-        "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) FROM e GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE) " +
-          "UNION ALL " +
-          "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) FROM e GROUP BY TUMBLE(ts, INTERVAL '10' MINUTE)")
-    }
-    assert(e.getMessage.contains("does not match"), e.getMessage)
-    // a UNION inside parentheses (subquery) is NOT a scope boundary: the
-    // outer aux still sees the statement's window
-    rewrite(
-      "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) FROM " +
-        "(SELECT ts FROM a UNION ALL SELECT ts FROM b) " +
-        "GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)")
+    // branch 2's auxiliary matches only branch 1's window
+    val msg = rejected(
+      "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) FROM gw GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE) " +
+        "UNION ALL " +
+        "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) FROM gw GROUP BY TUMBLE(ts, INTERVAL '10' MINUTE)")
+    assert(msg.contains(MultipleWindows), msg)
+    // a UNION inside a FROM subquery: the outer auxiliary sees the outer window
+    assertSamePlan(
+      "SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) AS s FROM " +
+        "(SELECT ts FROM gw_a UNION ALL SELECT ts FROM gw_b) " +
+        "GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)",
+      "SELECT window.start AS s FROM " +
+        "(SELECT ts FROM gw_a UNION ALL SELECT ts FROM gw_b) " +
+        "GROUP BY window(ts, '5 minutes')")
+  }
+
+  test("an auxiliary matching only a sibling subquery's window is rejected") {
+    // subquery a labels its 10-minute windows with a 5-minute auxiliary,
+    // whose twin window is grouped only in subquery b
+    val msg = rejected(
+      "SELECT a.s FROM " +
+        "(SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) s FROM gw " +
+        "GROUP BY TUMBLE(ts, INTERVAL '10' MINUTE)) a JOIN " +
+        "(SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) s2 FROM gw " +
+        "GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)) b ON a.s = b.s2")
+    assert(msg.contains(MultipleWindows), msg)
+  }
+
+  test("an auxiliary in a SELECT with no grouped window is rejected") {
+    val msg = rejected("SELECT TUMBLE_START(ts, INTERVAL '5' MINUTE) FROM gw")
+    assert(msg.contains("TUMBLE_START outside a query grouped by TUMBLE"), msg)
+    // the check reaches CTE bodies and subquery expressions, which the
+    // parsed plan keeps beside its children
+    val inCte = rejected("WITH c AS (SELECT SESSION_END(ts, INTERVAL '5' MINUTE) AS s FROM gw) " +
+      "SELECT s FROM c")
+    assert(inCte.contains("SESSION_END outside a query grouped by SESSION"), inCte)
+    val inSubquery = rejected(
+      "SELECT (SELECT max(TUMBLE_END(ts, INTERVAL '5' MINUTE)) FROM gw) AS m")
+    assert(inSubquery.contains("TUMBLE_END outside a query grouped by TUMBLE"), inSubquery)
+    val msg2 = rejected("SELECT HOP_END(ts, INTERVAL '1' MINUTE, INTERVAL '5' MINUTE) AS e " +
+      "FROM gw GROUP BY TUMBLE(ts, INTERVAL '5' MINUTE)")
+    assert(msg2.contains("HOP_END outside a query grouped by HOP"), msg2)
   }
 
 }
