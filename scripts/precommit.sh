@@ -15,7 +15,19 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 echo "[precommit] Tier-1 suite (the r11/r17 lesson: plan audits cover every"
 echo "[precommit] registered query — a targeted testOnly cannot)"
+# what the suite leaves on tmpfs: each /dev/shm/graft-* root's entries and
+# size (du -s, KB), printed before and after the run
+shm_census() {
+  for d in /dev/shm/graft-*; do
+    [ -e "$d" ] && echo "[precommit] $1: $d $(ls -A "$d" | wc -l) entries, $(du -s "$d" | cut -f1) KB"
+  done
+  return 0
+}
 export COURSIER_MODE=offline SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
 timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true Test/compile
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)" SPARK_LOCAL_DIRS=/tmp/spark-local
-timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true "testOnly *"
+shm_census before
+status=0
+timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true "testOnly *" || status=$?
+shm_census after
+exit "$status"

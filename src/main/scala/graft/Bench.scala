@@ -137,12 +137,10 @@ object Bench {
       candidates.sortBy { case (_, t, ref) => -(t / ref) }.flatMap { case (name, t1, _) =>
         if (spent > budget) None
         else {
-          val t0 = System.nanoTime()
-          val t2 = try { SparkEntry.queries(name)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => t1 }
-          spent += (System.nanoTime() - t0) / 1e9
+          val (t2, ok) = timed(name, SparkEntry.queries(name))
+          spent += t2
           hostDriftReruns += 1
-          Some(name -> math.min(t1, t2))
+          Some(name -> (if (ok) math.min(t1, t2) else t1))
         }
       }.toMap
     }

@@ -17,17 +17,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     (which cannot parse the clause).
   *  2. `… FOR SYSTEM_TIME AS OF …` → [[TemporalSql]] (single-shuffle as-of
   *     lowering); same strictness.
-  *  3. The rn=1 dedup idiom (`ROW_NUMBER() OVER (…) … WHERE rn = 1`) →
-  *     [[graft.streaming.DedupSql]] keep-first/last keyed aggregate (the
-  *     StreamExecDeduplicateRule recognition). Near-miss text (e.g.
-  *     `rn = 2`) falls through — it is ordinary, legal window SQL.
-  *  4. Everything else: lateral correlates ([[LateralSql]]:
-  *     `LATERAL TABLE(f(x))`) are rewritten as text (a no-op when absent),
-  *     then `spark.sql` plans the statement inside Catalyst with graft's
-  *     session functions registered — group windows ([[GroupWindowSql]]:
-  *     TUMBLE/HOP/SESSION + `_START`/`_END`) among them — so a statement
-  *     MIXING the two (a windowed aggregate over a lateral expansion) needs
-  *     no extra step.
+  *  3. Everything else: [[org.apache.spark.sql.graft.GraftSqlFunctions.sql]]
+  *     parses the statement once with graft's session functions registered
+  *     — group windows ([[GroupWindowSql]]: TUMBLE/HOP/SESSION +
+  *     `_START`/`_END`) among them — lowers lateral correlates
+  *     ([[LateralSql]]: `LATERAL TABLE(f(x))`) on the parsed plan and the
+  *     rn=1 dedup idiom ([[graft.streaming.DedupSql]]: `ROW_NUMBER() OVER
+  *     (…) … WHERE rn = 1`, the StreamExecDeduplicateRule recognition) on
+  *     the analyzed plan. A near-miss (`rn = 2`, two ORDER BY keys) stays
+  *     ordinary window SQL, and a statement MIXING idioms (a windowed
+  *     aggregate over a lateral expansion) needs no extra step.
   *
   * This is exactly the distance the five separate doors couldn't cover: a
   * user pasting reference SQL that combines idioms needs no knowledge of
@@ -595,7 +594,8 @@ object GraftSql {
       // CreateViewOperation): the BODY routes back through this dispatcher,
       // so a view over idiom text (TUMBLE, LATERAL TABLE, rn=1,
       // MATCH_RECOGNIZE, FOR SYSTEM_TIME) registers fine — Spark's own
-      // CREATE TEMPORARY VIEW would reject the unlowered text at parse.
+      // CREATE TEMPORARY VIEW would reject the last two at parse, leave
+      // LATERAL TABLE unresolved and keep rn=1 a rank no stream can run.
       case CreateViewR(ifNotExists, name0, body) =>
         resolveNameOpt(spark, name0) match {
           case None => spark.sql(text) // real Spark database: Spark's own
@@ -1010,11 +1010,11 @@ object GraftSql {
       // a LATERAL TABLE call naming a REGISTERED temporal table function —
       // the 1.11 function form of the temporal join (`FROM Orders o,
       // LATERAL TABLE (Rates(o.rowtime)) r WHERE …`); a UDTF lateral with
-      // the same grammar stays with LateralSql below, exactly the
-      // reference's function-catalog kind check at Correlate planning time
+      // the same grammar falls through to the generator lowering below,
+      // exactly the reference's function-catalog kind check at Correlate
+      // planning time
       TemporalFunction.sql(spark, text)
-    else graft.streaming.DedupSql.tryDedup(spark, text).getOrElse(
-      org.apache.spark.sql.graft.GraftSqlFunctions.sql(spark, LateralSql.rewrite(text)))
+    else org.apache.spark.sql.graft.GraftSqlFunctions.sql(spark, text)
   }
 
   /** Execute one INSERT against a registered sink; returns (sink read-back,

@@ -1,80 +1,29 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftSqlFunctions
 
 /** Flink `LATERAL TABLE(udtf(...))` SQL surface (reference Correlate:
   * flink-table-planner-blink StreamExecCorrelate.scala + the
-  * `FROM t, LATERAL TABLE(F(x)) AS T(col…)` grammar in flink-sql-parser):
-  * lowered onto Spark's native LATERAL VIEW generators so the correlate
-  * stays inside Catalyst (codegen'd Generate, no UDTF round-trip).
-  *
-  *  - `, LATERAL TABLE(F(args)) AS T(cols)` → `LATERAL VIEW gen T AS cols`
-  *    (cross-apply: rows with no output drop, matching the comma-join form)
-  *  - `LEFT JOIN LATERAL TABLE(F(args)) AS T(cols) ON TRUE`
-  *    → `LATERAL VIEW OUTER gen T AS cols` (reference left-correlate: rows
-  *    with no output survive with nulls)
-  *
-  * Table-function names resolve through a registry of lowering templates —
+  * `FROM t, LATERAL TABLE(F(x)) AS T(col…)` grammar in flink-sql-parser).
+  * [[org.apache.spark.sql.graft.GraftSqlFunctions.sql]] lowers the comma
+  * form to `LATERAL VIEW F(args) T AS cols` (rows with no output drop) and
+  * `LEFT JOIN … ON TRUE` to `LATERAL VIEW OUTER` (they survive with nulls)
+  * on the parsed plan, so the correlate stays a codegen'd Generate inside
+  * Catalyst. The UDTFs `split_rows` / `split_rows_indexed` are session
+  * generator functions (explode / posexplode of a literal-delimiter split),
   * the analogue of the reference's function-catalog lookup at Correlate
-  * planning time. Spark SQL cannot register user generators, so each UDTF
-  * maps to a native generator composition (the Spark-first translation).
+  * planning time.
   */
 object LateralSql {
-
-  // split_rows(col, 'd'): the delimiter is a LITERAL in the reference UDTF,
-  // but Spark's split() takes a REGEX — a '.', '|' or '+' delimiter would
-  // silently split on everything/nothing. Escape regex metachars in the
-  // literal before templating (the DuckDB oracle's string_split is literal).
-  private val SplitArgsR = "(?s)\\s*(.+?)\\s*,\\s*'(.*)'\\s*".r
-  private def literalSplit(args: String): String = args match {
-    case SplitArgsR(c, d) =>
-      val quoted = d.replaceAll("([\\\\.\\[\\]{}()*+?^$|])", "\\\\\\\\$1")
-      s"split($c, '$quoted')"
-    case other => s"split($other)" // non-literal delimiter: regex semantics
-  }
-
-  /** UDTF name → args → Spark generator expression text. */
-  private val registry: Map[String, String => String] = Map(
-    "split_rows" -> (args => s"explode(${literalSplit(args)})"),
-    "split_rows_indexed" -> (args => s"posexplode(${literalSplit(args)})"))
-
-  private val CrossR =
-    """(?i),\s*LATERAL TABLE\(\s*(\w+)\(([^)]*)\)\s*\)\s+AS\s+(\w+)\(([\w, ]+)\)""".r
-  private val LeftR =
-    ("""(?i)LEFT JOIN LATERAL TABLE\(\s*(\w+)\(([^)]*)\)\s*\)\s+AS\s+""" +
-      """(\w+)\(([\w, ]+)\)\s+ON TRUE""").r
-
-  private def gen(fn: String, args: String): String =
-    registry.getOrElse(fn.toLowerCase,
-      throw new IllegalArgumentException(
-        s"unknown table function '$fn' — register a lowering template"))(args)
-
-  def rewrite(sql: String): String = {
-    // quoteReplacement: the generated text is a LITERAL replacement —
-    // without it replaceAllIn would halve the escaped-delimiter
-    // backslashes and read a '$' in user args as a group reference
-    val q = scala.util.matching.Regex.quoteReplacement _
-    var out = sql
-    out = LeftR.replaceAllIn(out,
-      m => q(s"LATERAL VIEW OUTER ${gen(m.group(1), m.group(2))} ${m.group(3)} AS ${m.group(4)}"))
-    out = CrossR.replaceAllIn(out,
-      m => q(s" LATERAL VIEW ${gen(m.group(1), m.group(2))} ${m.group(3)} AS ${m.group(4)}"))
-    out
-  }
-
-  def run(spark: SparkSession, dir: String, sql: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(rewrite(sql))
-  }
 
   /** q_lateral_sql: the reference's comma-join correlate text, verbatim. */
   val qLateralSql: Q = Q(
     "q_lateral_sql",
-    (s, dir) => run(s, dir,
+    (s, dir) => { Tables.registerAll(s, dir); GraftSqlFunctions.sql(s,
       """SELECT event_id, tok
         |FROM events, LATERAL TABLE(split_rows(event_type, 'i')) AS T(tok)
-        |ORDER BY event_id, tok""".stripMargin),
+        |ORDER BY event_id, tok""".stripMargin) },
     Some("""SELECT event_id, unnest(string_split(event_type, 'i')) AS tok
            |FROM events ORDER BY event_id, tok""".stripMargin))
 
@@ -82,10 +31,10 @@ object LateralSql {
     * i.e. a multi-column table function. */
   val qLateralSqlIndexed: Q = Q(
     "q_lateral_sql_indexed",
-    (s, dir) => run(s, dir,
+    (s, dir) => { Tables.registerAll(s, dir); GraftSqlFunctions.sql(s,
       """SELECT event_id, pos, tok
         |FROM events, LATERAL TABLE(split_rows_indexed(event_type, 'e')) AS T(pos, tok)
-        |ORDER BY event_id, pos""".stripMargin),
+        |ORDER BY event_id, pos""".stripMargin) },
     Some("""SELECT event_id,
            |       CAST(unnest(generate_series(0, len(string_split(event_type, 'e')) - 1)) AS INTEGER) AS pos,
            |       unnest(string_split(event_type, 'e')) AS tok

@@ -1,18 +1,30 @@
 package graft.streaming
 
-import graft.{Q, Tables}
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeSet,
+  CreateStruct, EqualTo, Expression, GetStructField, Literal, RowNumber, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{MaxBy, MinBy}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Command, Filter, LogicalPlan,
+  Project, SubqueryAlias, Window}
+import org.apache.spark.sql.catalyst.trees.TreePattern.{FILTER, WINDOW}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlFunctions
+import org.apache.spark.sql.types.IntegerType
+import scala.util.chaining._
 
 /** The reference's streaming-dedup SQL idiom (StreamExecDeduplicateRule:
   * flink-table-planner-blink/.../stream/StreamExecDeduplicate.scala — the
   * planner RECOGNIZES `ROW_NUMBER() OVER (PARTITION BY k ORDER BY t [DESC])
   * … WHERE rn = 1` and swaps the O(n log n) rank for O(1)-per-key
-  * Deduplicate state): the same recognition here, lowered onto a min_by /
-  * max_by keyed aggregate — Spark's deterministic expression of
+  * Deduplicate state): the same recognition on the analyzed plan
+  * ([[lower]], applied by every statement of
+  * [[org.apache.spark.sql.graft.GraftSqlFunctions.sql]]), lowered onto a
+  * min_by / max_by keyed aggregate — Spark's deterministic expression of
   * keep-first / keep-last whose update-mode changelog is exactly the
   * reference operator's retraction stream. Plain `row_number` SQL cannot
-  * run on a stream in either engine; the rewrite is what makes the idiom
+  * run on a stream in either engine; the lowering is what makes the idiom
   * executable, which is the entire point of the reference rule.
   *
   * Scale posture: state per key is ONE row (the current winner) carried by
@@ -21,89 +33,83 @@ import org.apache.spark.sql.functions._
   */
 object DedupSql {
 
-  // Tolerated text variants (the reference rule matches the logical PLAN,
-  // so surface spelling must not matter): an alias on the derived table
-  // (`) AS t`), a qualified rank filter (`t.rn = 1`), and a trailing
-  // ORDER BY on the outer query.
-  private val RnR =
-    ("(?is)SELECT \\* FROM \\(\\s*SELECT \\*, ROW_NUMBER\\(\\) OVER \\(\\s*" +
-      "PARTITION BY ([\\w, ]+?) ORDER BY (\\w+)( DESC)?\\s*\\) AS rn FROM (\\w+)\\s*\\)" +
-      "(?: (?:AS )?(\\w+))? " +
-      "WHERE (?:\\w+\\.)?rn = 1(?: ORDER BY ([\\w, ]+?))?").r
+  /** Every `Filter(rn = 1)` over column-only projections of a Window whose
+    * one expression is `row_number() OVER (PARTITION BY ks ORDER BY o
+    * [DESC])` — one ORDER BY key with its default NULLS placement, as the
+    * reference rule demands — becomes the keep-first (ASC) / keep-last
+    * (DESC) aggregate per key. Any spelling Spark analyzes to that shape
+    * matches: aliases, qualifiers, column lists, outer ORDER BYs. The
+    * Filter's output keeps its expression ids and column order, so the plan
+    * above stays resolved; the rank column becomes the constant 1. Anything
+    * else, a rank over two ORDER BY keys included, is returned unchanged. */
+  def lower(plan: LogicalPlan): LogicalPlan = plan match {
+    case _: Command => plan // already executed by the DataFrame that holds it
+    case _ => plan.transformUpWithPruning(_.containsAllPatterns(FILTER, WINDOW)) {
+      case f @ Filter(EqualTo(rn: Attribute, Literal(1, IntegerType)), child) =>
+        keepOne(f.output, rn, child).getOrElse(f)
+    }
+  }
 
-  /** Recognize the rn=1 idiom over `df` (registered under the FROM name) and
-    * return the lowered keep-first/keep-last aggregate. */
-  def dedup(df: DataFrame, sql: String): DataFrame = {
-    val norm = sql.replaceAll("\\s+", " ").trim
-    norm match {
-      case RnR(partTxt, orderCol0, desc, _, _, orderTail) =>
-        // the idiom matches case-insensitively, so resolve the captured
-        // names to the relation's OWN spelling before set arithmetic — a
-        // `PARTITION BY USER_ID` over a user_id column must not leave the
-        // partition column inside `rest` (duplicated output column, polluted
-        // tie-break)
-        def resolve(n: String): String =
-          df.columns.find(_.equalsIgnoreCase(n)).getOrElse(n)
-        val partCols = partTxt.split(",").map(_.trim).toSeq.map(resolve)
-        val orderCol = resolve(orderCol0)
-        val rest = df.columns.filterNot(partCols.contains).toSeq
+  // named like the SQL function `struct`, so plans print as they always did
+  private def struct(fields: Seq[Attribute]): Expression =
+    CreateStruct(fields).tap(_.setTagValue(FunctionRegistry.FUNC_ALIAS, "struct"))
+
+  private def windowBelow(p: LogicalPlan): Option[Window] = p match {
+    case w: Window => Some(w)
+    case SubqueryAlias(_, c) => windowBelow(c)
+    case Project(list, c) if list.forall(_.isInstanceOf[Attribute]) => windowBelow(c)
+    case _ => None
+  }
+
+  private def keepOne(out: Seq[Attribute], rn: Attribute, child: LogicalPlan): Option[LogicalPlan] =
+    windowBelow(child).collect {
+      case Window(Seq(rank @ Alias(WindowExpression(_: RowNumber, _), _)), keys, Seq(order), in, _)
+          if rank.exprId == rn.exprId && keys.nonEmpty && keys.forall(_.isInstanceOf[Attribute]) &&
+            order.child.isInstanceOf[Attribute] &&
+            order.nullOrdering == order.direction.defaultNullOrdering &&
+            out.forall(a => a.exprId == rn.exprId || in.outputSet.contains(a)) =>
+        val keySet = AttributeSet(keys)
+        val rest = in.output.filterNot(keySet.contains)
+        val o = order.child.asInstanceOf[Attribute]
         // Tie-break DETERMINISTICALLY: min_by/max_by over the bare order
         // column picks an arbitrary winner when two rows per key share the
         // same order value (and would diverge run-to-run and from the
         // reference's arrival-order DeduplicateKeepFirstRowFunction). The
         // struct comparator totally orders candidates — order column first,
         // then the remaining columns as a stable lexicographic tie-break.
-        val orderKey = struct(col(orderCol) +: rest.filterNot(_ == orderCol).map(col): _*)
-        val winner =
-          if (desc == null) min_by(struct(rest.map(col): _*), orderKey)
-          else max_by(struct(rest.map(col): _*), orderKey)
-        // the intercepted text's outer `SELECT *` projects the rank column
-        // (constant 1 on every surviving row) — emit it too, or the lowered
-        // schema diverges from what the same SQL returns un-intercepted
-        val lowered = df.groupBy(partCols.map(col): _*)
-          .agg(winner.as("__r"))
-          .select(partCols.map(col) ++ rest.map(c => col(s"__r.$c")) :+
-            lit(1).as("rn"): _*)
-        Option(orderTail).map(_.trim).filter(_.nonEmpty) match {
-          case Some(o) => lowered.orderBy(o.split(",").map(_.trim).map(col).toSeq: _*)
-          case None    => lowered
-        }
-      case _ => throw new IllegalArgumentException(
-        s"not the deduplicate idiom (ROW_NUMBER … WHERE rn = 1): $norm")
+        val orderKey = struct(o +: rest.filterNot(_.exprId == o.exprId))
+        val winner = Alias((if (order.direction == Ascending) MinBy(struct(rest), orderKey)
+          else MaxBy(struct(rest), orderKey)).toAggregateExpression(), "__r")()
+        val field: Attribute => Expression = a =>
+          GetStructField(winner.toAttribute, rest.indexWhere(_.exprId == a.exprId), Some(a.name))
+        Project(out.map {
+          case a if a.exprId == rn.exprId => Alias(Literal(1), a.name)(a.exprId, a.qualifier)
+          case a if keySet.contains(a) => a
+          case a => Alias(field(a), a.name)(a.exprId, a.qualifier)
+        }, Aggregate(keys, keys.map(_.asInstanceOf[Attribute]) :+ winner, in))
     }
-  }
 
-  /** Non-throwing recognizer for the unified SQL entry point
-    * ([[graft.operators.GraftSql]]): when the text IS the idiom, resolve the
-    * FROM name through the session catalog and lower; None otherwise (the
-    * caller falls through to plain `spark.sql`, which handles ordinary
-    * ROW_NUMBER queries — only the rn=1 dedup shape is intercepted, exactly
-    * the reference rule's matching condition). */
-  def tryDedup(spark: SparkSession, sql: String): Option[DataFrame] = {
-    val norm = sql.replaceAll("\\s+", " ").trim
-    norm match {
-      case RnR(_, _, _, from, _, _) => Some(dedup(spark.table(from), sql))
-      case _ => None
+  /** Keep-first (ASC) or keep-last (DESC) event per user by event time,
+    * written as the reference's SQL idiom against a STREAMING view and
+    * executed by the lowered keyed aggregate (complete mode — the upsert
+    * view of the changelog). */
+  private def dedupStream(s: SparkSession, dir: String, order: String, sink: String): DataFrame =
+    StreamingOps.withStatePartitions(s, 8) {
+      StreamingOps.streamTable(s, dir, "events")
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          unix_micros(col("ts")).as("ts_us"))
+        .createOrReplaceTempView("events_stream")
+      val out = GraftSqlFunctions.sql(s,
+        s"""SELECT * FROM (
+           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY $order) AS rn
+           |  FROM events_stream) WHERE rn = 1""".stripMargin)
+      StreamingOps.runToMemory(s, out, "complete", sink).orderBy(col("user_id"))
     }
-  }
 
-  /** q_dedup_sql_first: first event per user by event time, written as the
-    * reference's SQL idiom against a STREAMING view and executed by the
-    * lowered keyed aggregate (complete mode — the upsert view of the
-    * changelog). */
+  /** q_dedup_sql_first: first event per user by event time. */
   val qDedupSqlFirst: Q = Q(
     "q_dedup_sql_first",
-    (s, dir) => StreamingOps.withStatePartitions(s, 8) {
-      import s.implicits._
-      val in = StreamingOps.streamTable(s, dir, "events")
-        .select($"user_id", $"event_id", $"event_type", unix_micros($"ts").as("ts_us"))
-      val out = dedup(in,
-        """SELECT * FROM (
-          |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us) AS rn
-          |  FROM events_stream) WHERE rn = 1""".stripMargin)
-      StreamingOps.runToMemory(s, out, "complete", "graft_dedup_sql_first")
-        .orderBy($"user_id")
-    },
+    (s, dir) => dedupStream(s, dir, "ts_us", "graft_dedup_sql_first"),
     Some("""SELECT user_id, arg_min(event_id, epoch_us(ts)) AS event_id,
            |       arg_min(event_type, epoch_us(ts)) AS event_type,
            |       arg_min(epoch_us(ts), epoch_us(ts)) AS ts_us,
@@ -113,17 +119,7 @@ object DedupSql {
   /** q_dedup_sql_last: the DESC variant — keep-last per key. */
   val qDedupSqlLast: Q = Q(
     "q_dedup_sql_last",
-    (s, dir) => StreamingOps.withStatePartitions(s, 8) {
-      import s.implicits._
-      val in = StreamingOps.streamTable(s, dir, "events")
-        .select($"user_id", $"event_id", $"event_type", unix_micros($"ts").as("ts_us"))
-      val out = dedup(in,
-        """SELECT * FROM (
-          |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us DESC) AS rn
-          |  FROM events_stream) WHERE rn = 1""".stripMargin)
-      StreamingOps.runToMemory(s, out, "complete", "graft_dedup_sql_last")
-        .orderBy($"user_id")
-    },
+    (s, dir) => dedupStream(s, dir, "ts_us DESC", "graft_dedup_sql_last"),
     Some("""SELECT user_id, arg_max(event_id, epoch_us(ts)) AS event_id,
            |       arg_max(event_type, epoch_us(ts)) AS event_type,
            |       arg_max(epoch_us(ts), epoch_us(ts)) AS ts_us,

@@ -2,15 +2,19 @@
  * FunctionRegistry) — see JvmHashCode.scala. */
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, GetStructField, Literal,
-  Multiply, SessionWindow, Sqrt, TimeWindow}
-import org.apache.spark.sql.catalyst.parser.ParseException
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-import org.apache.spark.sql.types.{CalendarIntervalType, DayTimeIntervalType, YearMonthIntervalType}
-import org.apache.spark.unsafe.types.CalendarInterval
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, QueryPlanningTracker}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction,
+  UnresolvedGenerator, UnresolvedTableValuedFunction, UnresolvedTVFAliases}
+import org.apache.spark.sql.catalyst.expressions.{Divide, Explode, Expression, GetStructField,
+  LateralSubquery, Literal, Multiply, PosExplode, SessionWindow, Sqrt, StringSplit, TimeWindow}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, LateralJoin, LogicalPlan,
+  SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.connector.catalog.CatalogV2Implicits.MultipartIdentifierHelper
+import org.apache.spark.sql.types.{CalendarIntervalType, DayTimeIntervalType, StringType,
+  YearMonthIntervalType}
+import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String}
 
 /** Registers graft's native expressions as SQL functions on an existing
   * session (works on any session, including one we didn't build — the
@@ -40,6 +44,26 @@ object GraftSqlFunctions {
       define(s"${w}_start", e => GetStructField(groupWindow(w, e), 0, Some("start")))
       define(s"${w}_end", e => GetStructField(groupWindow(w, e), 1, Some("end")))
     }
+    // the reference's UDTFs as generators: `LATERAL VIEW split_rows(…)` and
+    // the lowered `LATERAL TABLE(split_rows(…))` resolve them natively
+    define("split_rows", e => Explode(literalSplit(e)))
+    define("split_rows_indexed", e => PosExplode(literalSplit(e)))
+  }
+
+  /** `split_rows(s, 'd')` splits on a LITERAL delimiter (the reference UDTF,
+    * and the DuckDB oracle's string_split); Spark's split() takes a regex,
+    * where a '.', '|' or '+' would split on everything or nothing. A literal
+    * delimiter gets its metacharacters escaped (`.` becomes `\.`), which
+    * String.split still takes on its no-regex fast path — Pattern.quote's
+    * `\Q…\E` would compile a regex per row. A non-literal delimiter keeps
+    * regex semantics. */
+  private def literalSplit(args: Seq[Expression]): Expression = args match {
+    case Seq(str, Literal(d: UTF8String, _: StringType)) =>
+      StringSplit(str,
+        Literal(d.toString.replaceAll("([\\\\.\\[\\]{}()*+?^$|])", "\\\\$1")), Literal(-1))
+    case Seq(str, delim) => StringSplit(str, delim, Literal(-1))
+    case _ => throw new IllegalArgumentException(
+      s"split_rows takes (string, delimiter), got ${args.length} arguments")
   }
 
   /** Flink's group windows (reference FlinkSqlOperatorTable.java:778–826:
@@ -74,21 +98,53 @@ object GraftSqlFunctions {
   private val Auxiliaries: Map[String, String] =
     GroupWindows.flatMap(w => Seq(s"${w}_start" -> w, s"${w}_end" -> w)).toMap
 
-  /** `spark.sql` for text that may use the group-window functions: registers
-    * graft's functions on `spark` (callers such as a catalog restore on a
-    * `newSession()` never called [[register]]), then plans `text`. Before
-    * that, the one Flink rule Spark lacks is checked on the parsed plan: an
-    * auxiliary must sit in an Aggregate grouped by a window of its kind —
-    * Spark alone would assign each row its own window. */
+  /** The one SQL entry for graft's Flink idioms: parses `text` once and
+    * lowers on plans, never on text. It registers graft's functions (a
+    * catalog restore on a `newSession()` never called [[register]]), checks
+    * the group-window rule Spark lacks on the parsed plan (an auxiliary must
+    * sit in an Aggregate grouped by its window; Spark alone would give each
+    * row its own window), lowers `LATERAL TABLE` there, and lowers the
+    * `rn = 1` dedup idiom on the analyzed plan
+    * ([[_root_.graft.streaming.DedupSql.lower]]). */
   def sql(spark: SparkSession, text: String): DataFrame = {
     register(spark)
-    // text the parser rejects is spark.sql's to report
-    val parsed =
-      try Some(spark.sessionState.sqlParser.parsePlan(text))
-      catch { case _: ParseException => None }
-    parsed.foreach(requireGroupedAuxiliaries)
-    spark.sql(text)
+    val session = spark.asInstanceOf[classic.SparkSession]
+    session.withActive {
+      val tracker = new QueryPlanningTracker
+      val parsed = tracker.measurePhase(QueryPlanningTracker.PARSING)(
+        session.sessionState.sqlParser.parsePlan(text))
+      requireGroupedAuxiliaries(parsed)
+      val df = classic.Dataset.ofRows(session, lowerLateralTables(parsed), tracker)
+      // a streaming rank builds (only start() rejects it), so the idiom can
+      // be matched on the analyzed plan and the DataFrame rebuilt
+      val analyzed = df.queryExecution.analyzed
+      val deduped = _root_.graft.streaming.DedupSql.lower(analyzed)
+      if (deduped eq analyzed) df else classic.Dataset.ofRows(session, deduped, tracker)
+    }
   }
+
+  /** Flink's correlate `FROM t, LATERAL TABLE(f(args)) [AS] T(cols)` and
+    * `LEFT JOIN LATERAL TABLE(…) [AS] T(cols) ON TRUE` (reference Correlate
+    * rules) parse as a lateral join over a table function named TABLE. Each
+    * becomes `LATERAL VIEW [OUTER] f(args) T AS cols`: a Generate resolving
+    * `f` as a generator (cross-apply drops rows with no output; the left
+    * correlate keeps them with nulls). Every other lateral join is left
+    * alone, and an unknown `f` fails as an unresolved routine. CTE bodies
+    * and subquery plans are lowered too. */
+  private def lowerLateralTables(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithSubqueries {
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (name, body, depth) => (name, body.copy(child = lowerLateralTables(body.child)), depth)
+      })
+      case LateralJoin(left, LateralSubquery(SubqueryAlias(alias, UnresolvedTVFAliases(_,
+          UnresolvedTableValuedFunction(Seq(table), Seq(f: UnresolvedFunction), _), cols)),
+          _, _, _, _), joinType @ (Inner | LeftOuter), cond)
+          if table.equalsIgnoreCase("table") && cond.forall(_ == Literal.TrueLiteral) =>
+        Generate(UnresolvedGenerator(f.nameParts.asFunctionIdentifier, f.arguments),
+          unrequiredChildIndex = Nil, outer = joinType == LeftOuter,
+          qualifier = Some(alias.name), generatorOutput = cols.map(UnresolvedAttribute.quoted),
+          child = left)
+    }
 
   private def requireGroupedAuxiliaries(plan: LogicalPlan): Unit = {
     def calls(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect {

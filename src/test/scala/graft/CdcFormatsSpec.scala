@@ -184,7 +184,7 @@ class CdcFormatsSpec extends GraftSpec {
     // delete phase) exercises every pad path.
     val sparkS = spark
     import sparkS.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdc-pad-").toString
+    val dir = owned(java.nio.file.Files.createTempDirectory("cdc-pad-").toString)
     val ts = java.sql.Timestamp.valueOf("1996-01-02 00:00:00")
     Seq(
       (2L, 10L, "F", 100.0, ts, "1-URGENT"),
@@ -192,7 +192,8 @@ class CdcFormatsSpec extends GraftSpec {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val feed = CdcFormats.writeDebeziumFeedPhased(spark, dir)
+    // the feed's root is named after the unique fixture dir: nothing reuses it
+    val feed = owned(CdcFormats.writeDebeziumFeedPhased(spark, dir))
     for (phase <- Seq("0_ins", "1_upd", "2_del")) {
       val files = new java.io.File(s"$feed/$phase").listFiles()
         .filter(_.getName.startsWith("part-"))
@@ -207,7 +208,7 @@ class CdcFormatsSpec extends GraftSpec {
     val q = CdcFormats.debezium(raw, CdcFormats.feedSchema)
       .writeStream.outputMode("append")
       .option("checkpointLocation",
-        graft.streaming.StreamingOps.freshCheckpoint("cdc-pad-spec"))
+        owned(graft.streaming.StreamingOps.freshCheckpoint("cdc-pad-spec")))
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
         val kinds = b.select("kind").collect().map(_.getString(0)).toSet
         batches.synchronized { batches(id) = kinds }; ()

@@ -16,8 +16,15 @@ trait GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  private val ownedPaths = scala.collection.mutable.ListBuffer[String]()
+
+  /** Marks `path` (a dir or file unique to this run, typically on tmpfs) for
+    * deletion when the suite ends; returns it. */
+  def owned(path: String): String = { ownedPaths += path; path }
+
   override def afterAll(): Unit = {
     // session shared across suites in one JVM; do not stop
+    ownedPaths.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
     super.afterAll()
   }
 

@@ -47,6 +47,54 @@ class GraftSqlSpec extends GraftSpec {
     assert(df.select("rn").distinct().collect().map(_.getInt(0)).toSeq == Seq(2))
   }
 
+  private def rkDedup(from: String): String =
+    s"""SELECT user_id, event_id, rk FROM (
+       |  SELECT user_id, event_id,
+       |         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_id) AS rk
+       |  FROM $from) WHERE rk = 1""".stripMargin
+
+  test("a dedup spelled with an rk alias and a column list lowers too") {
+    GraftSql.sql(spark, sfDir, "SELECT 1 AS one")
+    val df = GraftSql.run(spark, rkDedup("events"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("row_number"), s"idiom ran as a rank:\n$plan")
+    assert(df.columns.toSeq == Seq("user_id", "event_id", "rk"))
+    val want = spark.sql(
+      "SELECT user_id, min(event_id) AS event_id, 1 AS rk FROM events GROUP BY user_id")
+    assert(df.collect().toSet == want.collect().toSet)
+  }
+
+  test("near-miss: a rank over two ORDER BY keys is not the idiom, runs as a rank") {
+    GraftSql.sql(spark, sfDir, "SELECT 1 AS one")
+    val df = GraftSql.run(spark,
+      """SELECT * FROM (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+        |  FROM events) WHERE rn = 1""".stripMargin)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("row_number"), s"two-key rank was lowered:\n$plan")
+  }
+
+  private def tokens(text: String): Seq[(Long, String)] = {
+    GraftSql.sql(spark, sfDir, "SELECT 1 AS one")
+    GraftSql.run(spark, text).collect().toSeq.map(r => (r.getLong(0), r.getString(1))).sorted
+  }
+
+  test("LATERAL TABLE over a nested call lowers to a generator") {
+    val want = tokens("SELECT event_id, tok FROM events " +
+      "LATERAL VIEW explode(split(lower(event_type), 'i')) t AS tok")
+    assert(want.nonEmpty)
+    assert(tokens("SELECT event_id, tok FROM events, " +
+      "LATERAL TABLE(split_rows(lower(event_type), 'i')) AS T(tok)") == want)
+  }
+
+  test("LATERAL TABLE without AS before the alias lowers to a generator") {
+    val want = tokens(
+      "SELECT event_id, tok FROM events LATERAL VIEW explode(split(event_type, 'i')) t AS tok")
+    assert(want.nonEmpty)
+    assert(tokens("SELECT event_id, tok FROM events, " +
+      "LATERAL TABLE(split_rows(event_type, 'i')) T(tok)") == want)
+  }
+
   test("MATCH_RECOGNIZE statement routes to the NFA") {
     val base = Tables.t(spark, sfDir, "events")
       .select("user_id", "event_id", "event_type")
@@ -112,21 +160,22 @@ class GraftSqlSpec extends GraftSpec {
   test("the rn=1 idiom on a STREAMING view lowers to a runnable aggregate") {
     // the reference scenario StreamExecDeduplicateRule exists for: plain
     // row_number CANNOT run on a stream in either engine; the lowered
-    // keyed aggregate can. Spark would reject the un-lowered plan at
-    // analysis, so a green run certifies the rewrite actually engaged.
+    // keyed aggregate can. Spark builds the un-lowered plan but rejects it
+    // at start(), so a green run certifies the rewrite actually engaged —
+    // here for the rk-alias, column-list spelling the dedup test above
+    // covers on a batch view
     val sparkS = spark
     import sparkS.implicits._
     graft.streaming.StreamingOps.streamTable(spark, sfDir, "events")
       .select($"user_id", $"event_id", unix_micros($"ts").as("ts_us"))
       .createOrReplaceTempView("gsql_stream_dedup")
-    val lowered = GraftSql.run(spark,
-      """SELECT * FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us) AS rn
-        |  FROM gsql_stream_dedup) WHERE rn = 1""".stripMargin)
+    val lowered = GraftSql.run(spark, rkDedup("gsql_stream_dedup"))
     assert(lowered.isStreaming)
     val out = graft.streaming.StreamingOps.runToMemory(
       spark, lowered, "complete", "gsql_stream_dedup_out")
+    assert(out.columns.toSeq == Seq("user_id", "event_id", "rk"))
     assert(out.count() > 0)
+    assert(out.select("rk").distinct().collect().map(_.getInt(0)).toSeq == Seq(1))
   }
 
   test("plural interval units (MINUTES) and engine functions work through the door") {

@@ -129,34 +129,61 @@ class GroupWindowSqlSpec extends GraftSpec {
 
 }
 
-/** LATERAL TABLE lowering (reference Correlate SQL surface). */
+/** LATERAL TABLE lowering (reference Correlate SQL surface): each Flink
+  * spelling must optimize to the same plan as its `LATERAL VIEW` spelling. */
 class LateralSqlSpec extends GraftSpec {
-  import graft.operators.LateralSql.rewrite
+
+  private lazy val views: Unit = {
+    val s = spark
+    import s.implicits._
+    Seq("a,b", "c", null).toDF("a").createOrReplaceTempView("lat_t")
+    Seq("x.y", "plain").toDF("a").createOrReplaceTempView("lat_dot")
+  }
+
+  private def flink(text: String): DataFrame = { views; GraftSql.run(spark, text) }
+
+  // the parser lowercases a LATERAL VIEW's table alias; the lowered
+  // LATERAL TABLE keeps the alias as written, so these use a lowercase `t`
+  private def assertSamePlan(flinkText: String, sparkText: String): Unit = {
+    val got = flink(flinkText).queryExecution.optimizedPlan
+    val want = spark.sql(sparkText).queryExecution.optimizedPlan
+    assert(got.canonicalized == want.canonicalized, s"\n$got\nvs\n$want")
+  }
 
   test("comma-join correlate lowers to LATERAL VIEW") {
-    val out = rewrite("SELECT a, w FROM t, LATERAL TABLE(split_rows(a, ',')) AS T(w)")
-    assert(out == "SELECT a, w FROM t LATERAL VIEW explode(split(a, ',')) T AS w")
+    assertSamePlan("SELECT a, w FROM lat_t, LATERAL TABLE(split_rows(a, ',')) AS t(w)",
+      "SELECT a, w FROM lat_t LATERAL VIEW explode(split(a, ',')) t AS w")
+    assertSamePlan(
+      "SELECT a, i, w FROM lat_t, LATERAL TABLE(split_rows_indexed(a, ',')) AS t(i, w)",
+      "SELECT a, i, w FROM lat_t LATERAL VIEW posexplode(split(a, ',')) t AS i, w")
+    // inside a CTE body and a subquery expression too
+    assertSamePlan("WITH c AS (SELECT a, w FROM lat_t, " +
+      "LATERAL TABLE(split_rows(a, ',')) AS t(w)) SELECT * FROM c",
+      "WITH c AS (SELECT a, w FROM lat_t LATERAL VIEW explode(split(a, ',')) t AS w) " +
+        "SELECT * FROM c")
+    assertSamePlan("SELECT a FROM lat_t WHERE a IN (SELECT w FROM lat_t, " +
+      "LATERAL TABLE(split_rows(a, ',')) AS t(w))",
+      "SELECT a FROM lat_t WHERE a IN " +
+        "(SELECT w FROM lat_t LATERAL VIEW explode(split(a, ',')) t AS w)")
   }
 
   test("LEFT JOIN ... ON TRUE lowers to LATERAL VIEW OUTER, unknown UDTF fails loudly") {
-    val out = rewrite(
-      "SELECT a, w FROM t LEFT JOIN LATERAL TABLE(split_rows(a, ',')) AS T(w) ON TRUE")
-    assert(out == "SELECT a, w FROM t LATERAL VIEW OUTER explode(split(a, ',')) T AS w")
-    intercept[IllegalArgumentException] {
-      rewrite("SELECT * FROM t, LATERAL TABLE(nope(a)) AS T(w)")
+    assertSamePlan(
+      "SELECT a, w FROM lat_t LEFT JOIN LATERAL TABLE(split_rows(a, ',')) AS t(w) ON TRUE",
+      "SELECT a, w FROM lat_t LATERAL VIEW OUTER explode(split(a, ',')) t AS w")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      flink("SELECT * FROM lat_t, LATERAL TABLE(nope(a)) AS t(w)")
     }
+    assert(e.getCondition == "ROUTINE_NOT_FOUND", e.getMessage)
+    assert(e.getMessage.contains("`nope`"), e.getMessage)
   }
 
   test("regex-metachar delimiters split LITERALLY (Spark split takes a regex)") {
-    val out = rewrite("SELECT w FROM t, LATERAL TABLE(split_rows(a, '.')) AS T(w)")
-    assert(out.contains("split(a, '\\\\.')"), out)
+    // the literal '.' reaches split() escaped, as the regex `\.`
+    assertSamePlan("SELECT w FROM lat_dot, LATERAL TABLE(split_rows(a, '.')) AS t(w)",
+      "SELECT w FROM lat_dot LATERAL VIEW explode(split(a, '\\\\.')) t AS w")
     // end-to-end: '.' must not split every character
-    val sparkS = spark
-    import sparkS.implicits._
-    Seq("x.y", "plain").toDF("a").createOrReplaceTempView("lat_dot")
-    val rows = spark.sql(
-      graft.operators.LateralSql.rewrite(
-        "SELECT a, w FROM lat_dot, LATERAL TABLE(split_rows(a, '.')) AS T(w)"))
+    val rows = flink("SELECT a, w FROM lat_dot, LATERAL TABLE(split_rows(a, '.')) AS T(w)")
       .collect().map(r => (r.getString(0), r.getString(1)))
     assert(rows.toSet == Set(("x.y", "x"), ("x.y", "y"), ("plain", "plain")), rows.toSeq)
   }

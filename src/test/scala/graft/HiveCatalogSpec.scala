@@ -13,7 +13,8 @@ import org.scalatest.BeforeAndAfterAll
 class HiveCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val stamp = java.util.UUID.randomUUID().toString.take(8)
-  private val metastoreDir = Tables.scratch(s"hive-metastore-$stamp/db")
+  private val metastoreRoot = Tables.scratch(s"hive-metastore-$stamp")
+  private val metastoreDir = s"$metastoreRoot/db"
   private val warehouseDir = Tables.scratch(s"hive-warehouse-$stamp")
 
   private var prevDefault: Option[SparkSession] = None
@@ -30,6 +31,9 @@ class HiveCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       SparkSession.setDefaultSession(s)
       SparkSession.setActiveSession(s)
     }
+    // both dirs are unique to this run: nothing else will reuse them
+    Seq(metastoreRoot, warehouseDir).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
     super.afterAll()
   }
 

@@ -49,9 +49,11 @@ class IterateMoveSpec extends AnyFunSuite {
     val dst = Files.createTempDirectory(Paths.get("/tmp"), "graft-move-xdst")
     // distinct devices: if ATOMIC_MOVE is supported anyway this still passes
     // through the same public contract (file lands once, source removed)
-    assert(IterateStream.moveParts(src, dst, "round-000001-"))
-    assert(Files.exists(dst.resolve("round-000001-part-xdev.parquet")))
-    assert(!Files.exists(src.resolve("part-xdev.parquet")))
+    try {
+      assert(IterateStream.moveParts(src, dst, "round-000001-"))
+      assert(Files.exists(dst.resolve("round-000001-part-xdev.parquet")))
+      assert(!Files.exists(src.resolve("part-xdev.parquet")))
+    } finally Seq(src, dst).foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
   }
 
   test("missing staged dir (empty round) moves nothing") {

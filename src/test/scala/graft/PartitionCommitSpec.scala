@@ -97,7 +97,7 @@ class PartitionCommitSpec extends GraftSpec {
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val path = Tables.scratch(s"pc-crash/${java.util.UUID.randomUUID()}")
+    val path = owned(Tables.scratch(s"pc-crash/${java.util.UUID.randomUUID()}"))
     // simulate a crash after promote but before the commit record: data
     // files for (tag, batch 0) already sit in the partition dir with the
     // batch-unique prefix, but no commit record exists
@@ -120,7 +120,6 @@ class PartitionCommitSpec extends GraftSpec {
     val seen = PartitionCommit.readCommitted(spark, path, "hr")
       .select("event_id").as[Long].collect().sorted.toSeq
     assert(seen == Seq(1L))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
   }
 
   test("the committer watermark is restored from the commit records") {

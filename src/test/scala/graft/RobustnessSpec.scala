@@ -189,9 +189,9 @@ class RobustnessSpec extends GraftSpec {
       PartitionCommit.readCommitted(spark, sink, "hr")
         .select("event_id").collect().map(_.getLong(0)).toSeq.sorted
     val cleanSink = Files.createTempDirectory("graft_pc_crash_clean").toString + "/out"
-    drain(cleanSink, StreamingOps.freshCheckpoint("pc-crash-clean"), None)
+    drain(cleanSink, owned(StreamingOps.freshCheckpoint("pc-crash-clean")), None)
     val soakSink = Files.createTempDirectory("graft_pc_crash_soak").toString + "/out"
-    val ckpt = StreamingOps.freshCheckpoint("pc-crash")
+    val ckpt = owned(StreamingOps.freshCheckpoint("pc-crash"))
     assert(drain(soakSink, ckpt, Some(1L)), // crash mid-protocol on batch 1
       "injected crash never fired — the recovery check would be vacuous")
     drain(soakSink, ckpt, None)             // recovery drain, same checkpoint

@@ -9,7 +9,7 @@ package graft
 class ScaleDataSpec extends GraftSpec {
 
   private lazy val outDir = {
-    val d = Tables.scratch(s"scale-data-spec/${java.util.UUID.randomUUID()}")
+    val d = owned(Tables.scratch(s"scale-data-spec/${java.util.UUID.randomUUID()}"))
     ScaleData.synthesize(spark, sfDir, d, factor = 3)
     d
   }
@@ -79,7 +79,7 @@ class ScaleDataSpec extends GraftSpec {
 
   test("past the 26-rotation cycle (factor > 26) texts stay distinct and vectors stay dim-sized") {
     import spark.implicits._
-    val d = Tables.scratch(s"scale-data-spec30/${java.util.UUID.randomUUID()}")
+    val d = owned(Tables.scratch(s"scale-data-spec30/${java.util.UUID.randomUUID()}"))
     ScaleData.synthesize(spark, sfDir, d, factor = 30)
     val docs = spark.read.parquet(s"$d/documents.parquet")
     val bySrc = docs.groupBy(($"doc_id" % ScaleData.KeyShift).as("src_id"))

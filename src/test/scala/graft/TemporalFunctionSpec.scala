@@ -86,9 +86,9 @@ class TemporalFunctionSpec extends GraftSpec {
     assert(e.getMessage.contains("r.currency in WHERE"))
   }
 
-  test("a UDTF lateral still routes to LateralSql, not the temporal recognizer") {
-    // split_rows is a UDTF template, not a temporal function: the door must
-    // keep routing it through LateralSql's generator lowering
+  test("a UDTF lateral still lowers to a generator, not the temporal recognizer") {
+    // split_rows is a generator function, not a temporal function: the door
+    // must keep lowering it to a LATERAL VIEW generator
     Tables.registerAll(spark, sfDir)
     val df = GraftSql.sql(spark, sfDir,
       """SELECT event_id, tok
