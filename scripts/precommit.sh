@@ -23,6 +23,12 @@ shm_census() {
   done
   return 0
 }
+# one cache discipline: per-session memos and catalogs live in
+# graft.SessionScoped, the only place that may sweep stopped sessions
+if grep -rn "isStopped\|WeakHashMap" src/main | grep -v "^src/main/scala/graft/SessionScoped.scala:"; then
+  echo "[precommit] per-session state kept outside graft.SessionScoped (above)" >&2
+  exit 1
+fi
 export COURSIER_MODE=offline SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
 timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true Test/compile
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)" SPARK_LOCAL_DIRS=/tmp/spark-local

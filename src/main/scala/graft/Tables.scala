@@ -38,10 +38,9 @@ object Tables {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  // keyed on the session itself: SparkSession keeps Object's identity
-  // equals/hashCode, so one session can never hit another's slot
-  private val tableCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+  // each session's resolved plans, keyed by (dir, table)
+  private val tableCache = new SessionScoped(
+    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
 
   /** Raw schema, memoized per (dir, table) — r21: file-stream sources need
     * an explicit schema, and every streaming query previously paid a fresh
@@ -67,12 +66,9 @@ object Tables {
     * listing) warm — the same reason a long-lived service holds its catalog's
     * resolved tables instead of re-resolving per query. Plans are immutable,
     * so sharing one DataFrame across queries is safe. */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // drop entries of stopped sessions: their plans are unusable
-    tableCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    tableCache.computeIfAbsent((spark, dir, name),
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    tableCache(spark).computeIfAbsent((dir, name),
       _ => normalize(name, raw(spark, dir, name)))
-  }
 
   def normalize(name: String, df: DataFrame): DataFrame =
     if (name != "events") df

@@ -161,7 +161,6 @@ object CepTws {
   def streamingMatchesTws(ds: Dataset[Ev], pat: Pattern[Ev],
       delay: String = "0 seconds"): Dataset[CepMatch] = {
     val spark = ds.sparkSession
-    import spark.implicits._
     implicit val enc: Encoder[CepMatch] = Encoders.product[CepMatch]
     streamingMatchesWithTimeoutsTws(ds, pat, delay)
       .filter(!_.is_timeout)

@@ -1,7 +1,6 @@
 package graft.dsl
 
 import org.apache.spark.sql.{Column, Dataset, Encoder, KeyValueGroupedDataset}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** DataStream-style fluent API (reference §2.2: flink-streaming-java/.../
@@ -103,7 +102,6 @@ final class GraftConnectedStreams[A, B](left: Dataset[A], right: Dataset[B]) {
       implicit ek: Encoder[K], es: Encoder[S], eu: Encoder[U],
       etag: Encoder[(Option[A], Option[B])],
       ektag: Encoder[(K, Long, Option[A], Option[B])]): Dataset[U] = {
-    val spark = left.sparkSession
     val tagged =
       left.map(a => (keyL(a), orderL(a), Option(a), Option.empty[B]))(ektag)
         .union(right.map(b => (keyR(b), orderR(b), Option.empty[A], Option(b)))(ektag))

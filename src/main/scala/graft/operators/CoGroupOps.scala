@@ -90,7 +90,6 @@ object CoGroupOps {
     "q_kafka_roundtrip",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.functions._
       // log identity includes dataset AND fixture stamp: a committed
       // segment is never rewritten, so a fixed path would serve one scale
       // factor's (or a regenerated fixture's) stale data to another

@@ -298,7 +298,6 @@ object DedupOps {
   val qSimhashPairs: Q = Q(
     "q_simhash_pairs",
     (s, dir) => {
-      import s.implicits._
       val sh = simhashM(s, dir)
       sh.as("a").join(sh.as("b"), col("a.doc_id") < col("b.doc_id"))
         .select(

@@ -290,33 +290,14 @@ object GraftSql {
     * opening a HiveCatalog exposes its stored objects;
     * `'type'='generic_in_memory'` is the reference's session-scoped
     * catalog (nothing persisted). */
-  // Keyed by SparkSession, matching the reference's CatalogManager scope
-  // (one per TableEnvironment, never JVM-global): two concurrent sessions
-  // cannot observe each other's registered catalogs or current-catalog
-  // pointer, so DDL executed in one can never be durably recorded into a
-  // catalog made current by another (r9 ADVICE). WEAK keys: a session that
-  // goes unreferenced releases its entry — a session-per-request JVM does
-  // not pin every dead session's state for its lifetime.
-  // resetNamedCatalogs() clears all for test hygiene.
-  private val namedCatalogsBySession =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        scala.collection.concurrent.TrieMap[String, Option[String]]]())
-  private val currentCatalogBySession =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, (String, Option[String])]())
-  private def namedCatalogs(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, Option[String]] =
-    namedCatalogsBySession.synchronized {
-      var m = namedCatalogsBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, Option[String]]()
-        namedCatalogsBySession.put(spark, m)
-      }
-      m
-    }
-  private def currentNamedCatalog(spark: SparkSession): Option[(String, Option[String])] =
-    Option(currentCatalogBySession.get(spark))
+  // Per session, like the reference's CatalogManager: DDL executed in one
+  // session is never recorded into a catalog made current by another.
+  private final class Catalogs {
+    val named = scala.collection.concurrent.TrieMap[String, Option[String]]()
+    val current =
+      new java.util.concurrent.atomic.AtomicReference[Option[(String, Option[String])]](None)
+  }
+  private val catalogs = new graft.SessionScoped(new Catalogs)
 
   /** True iff `name` is a session temp view (the only kind of view/table
     * this engine registers itself — real catalog tables take Spark's own
@@ -325,11 +306,11 @@ object GraftSql {
     try spark.catalog.getTable(name).isTemporary
     catch { case _: org.apache.spark.sql.AnalysisException => false }
 
-  /** Test/iteration hygiene: forget every named catalog and return to the
-    * default (the state a fresh session starts in). */
-  private[graft] def resetNamedCatalogs(): Unit = {
-    namedCatalogsBySession.clear()
-    currentCatalogBySession.clear()
+  /** Test/iteration hygiene: forget `spark`'s named catalogs and return it
+    * to the default (the state a fresh session starts in). */
+  private[graft] def resetNamedCatalogs(spark: SparkSession): Unit = {
+    catalogs(spark).named.clear()
+    catalogs(spark).current.set(None)
   }
 
   /** Same, against already-registered views only (no fixture dir). When a
@@ -352,16 +333,16 @@ object GraftSql {
     * durability is the metastore's own, and an IF NOT EXISTS no-op are
     * never recorded). */
   private def maybeRecord(spark: SparkSession, ddl: String): Unit =
-    if (recordingEnabled.value) currentNamedCatalog(spark) match {
+    if (recordingEnabled.value) catalogs(spark).current.get match {
       case Some((_, Some(catDir))) =>
-        graft.streaming.GraftCatalog.record(catDir, ddl)
+        graft.streaming.GraftCatalog.record(spark, catDir, ddl)
       case _ => ()
     }
 
   /** Remove a dropped object's stored definition from the current
     * persistent named catalog, if any. */
   private def maybeUnrecord(spark: SparkSession, name: String): Unit =
-    if (recordingEnabled.value) currentNamedCatalog(spark) match {
+    if (recordingEnabled.value) catalogs(spark).current.get match {
       case Some((_, Some(catDir))) =>
         graft.streaming.GraftCatalog.drop(catDir, name)
       case _ => ()
@@ -374,7 +355,7 @@ object GraftSql {
     * reference's catalog-rename semantics (a bare unrecord would silently
     * lose the object on replay, r9 ADVICE). */
   private def maybeRerecordRename(spark: SparkSession, from: String, to: String): Unit =
-    if (recordingEnabled.value) currentNamedCatalog(spark) match {
+    if (recordingEnabled.value) catalogs(spark).current.get match {
       case Some((_, Some(catDir))) =>
         // read → drop → record, in THAT order: a case-only rename (foo →
         // FOO) stores both names in the same lowercased file, so dropping
@@ -387,7 +368,7 @@ object GraftSql {
               "(?:TABLE|VIEW|FUNCTION)\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?)" +
               java.util.regex.Pattern.quote(from),
             "$1" + java.util.regex.Matcher.quoteReplacement(to))
-          graft.streaming.GraftCatalog.record(catDir, renamed)
+          graft.streaming.GraftCatalog.record(spark, catDir, renamed)
         }
       case _ => ()
     }
@@ -439,7 +420,7 @@ object GraftSql {
     * real catalog table Spark's own ALTER handles. */
   private def isRegisteredSink(spark: SparkSession, name0: String): Boolean =
     resolveNameOpt(spark, name0)
-      .exists(n => graft.streaming.GraftDdl.sink(n).isDefined)
+      .exists(n => graft.streaming.GraftDdl.sink(spark, n).isDefined)
 
   def run(spark: SparkSession, text0: String): DataFrame = {
     // dialect gate (reference TableConfig#setSqlDialect via SET
@@ -558,11 +539,11 @@ object GraftSql {
             throw new IllegalArgumentException(
               s"CREATE CATALOG requires a 'type' option: $text")) match {
             case "generic_in_memory" =>
-              namedCatalogs(spark)(name) = None
+              catalogs(spark).named(name) = None
             case "graft" =>
               val path = kv.getOrElse("path", throw new IllegalArgumentException(
                 s"catalog type 'graft' requires a 'path' option: $text"))
-              namedCatalogs(spark)(name) = Some(path)
+              catalogs(spark).named(name) = Some(path)
               // opening a persistent catalog exposes its stored objects
               graft.streaming.GraftCatalog.restore(spark, path)
             case other => throw new IllegalArgumentException(
@@ -579,10 +560,10 @@ object GraftSql {
       text match {
         case DropCatalogR(ifExists, name0) =>
           val name = name0.toLowerCase
-          if (currentNamedCatalog(spark).exists(_._1 == name))
+          if (catalogs(spark).current.get.exists(_._1 == name))
             throw new IllegalArgumentException(
               s"Cannot drop a catalog which is currently in use: $name")
-          if (namedCatalogs(spark).remove(name).isEmpty && ifExists == null)
+          if (catalogs(spark).named.remove(name).isEmpty && ifExists == null)
             throw new IllegalArgumentException(s"catalog does not exist: $name")
           Seq((name, "dropped")).toDF("catalog", "status")
         case _ => throw new IllegalArgumentException(
@@ -663,7 +644,7 @@ object GraftSql {
           resolveNameOpt(spark, name0) match {
             case None => spark.sql(text) // real Spark database: Spark's own
             case Some(name) =>
-              val sinkDropped = graft.streaming.GraftDdl.dropSink(name)
+              val sinkDropped = graft.streaming.GraftDdl.dropSink(spark, name)
               val viewDropped = spark.catalog.dropTempView(name)
               if (sinkDropped || viewDropped) {
                 maybeUnrecord(spark, name)
@@ -710,7 +691,7 @@ object GraftSql {
       // only for REGISTERED definitions: Spark's own ALTER TABLE ... ADD
       // COLUMNS on a real catalog table stays Spark's (the fallthrough)
       case HiveDialect.AddColsR(name0, mode, cols) if HiveDialect.isHive(spark) &&
-          graft.streaming.GraftDdl.tableCols(
+          graft.streaming.GraftDdl.tableCols(spark,
             resolveNameOpt(spark, name0).getOrElse(name0).toLowerCase).isDefined =>
         HiveDialect.alterColumns(spark,
           resolveNameOpt(spark, name0).getOrElse(name0), mode, cols)
@@ -727,7 +708,7 @@ object GraftSql {
       case AlterTableR(name0, optsTxt) =>
         import spark.implicits._
         resolveNameOpt(spark, name0) match {
-          case Some(name) if graft.streaming.GraftDdl.alterSink(name, optsTxt) =>
+          case Some(name) if graft.streaming.GraftDdl.alterSink(spark, name, optsTxt) =>
             Seq((name, "altered")).toDF("name", "status")
           case _ => spark.sql(text) // not a registered sink: Spark's own ALTER
         }
@@ -738,13 +719,13 @@ object GraftSql {
       // Spark's own ALTER ... RENAME below, which renames in place.
       case AlterRenameR("TABLE", from0, to0) if {
         resolveNameOpt(spark, from0).exists(f =>
-          graft.streaming.GraftDdl.sink(f).isDefined || isTempView(spark, f))
+          graft.streaming.GraftDdl.sink(spark, f).isDefined || isTempView(spark, f))
       } =>
         import spark.implicits._
         val from = resolveNameOpt(spark, from0).get
         val to = resolveNameOpt(spark, to0).getOrElse(
           throw new IllegalArgumentException(s"bad rename target: $to0"))
-        val sinkMoved = graft.streaming.GraftDdl.renameSink(from, to)
+        val sinkMoved = graft.streaming.GraftDdl.renameSink(spark, from, to)
         if (isTempView(spark, from)) {
           spark.table(from).createOrReplaceTempView(to)
           spark.catalog.dropTempView(from)
@@ -814,14 +795,14 @@ object GraftSql {
       // listing is driver-side metadata — the one legitimate collect.
       import spark.implicits._
       val views = spark.catalog.listTables().collect().map(_.name.toLowerCase).toSeq
-      (views ++ graft.streaming.GraftDdl.sinkNames).distinct.sorted.toDF("tableName")
+      (views ++ graft.streaming.GraftDdl.sinkNames(spark)).distinct.sorted.toDF("tableName")
     }
     else if (upper.trim.matches("(?s)SHOW\\s+CATALOGS\\s*;?\\s*")) {
       // SHOW CATALOGS (SqlCommandParser.java:139): the engine's single
       // default catalog, Spark's own name for it, and every CREATE
       // CATALOG-registered name — all USE-able
       import spark.implicits._
-      (Seq("default_catalog", "spark_catalog") ++ namedCatalogs(spark).keys)
+      (Seq("default_catalog", "spark_catalog") ++ catalogs(spark).named.keys)
         .sorted.toDF("catalogName")
     }
     else if (upper.trim.matches("(?s)SHOW\\s+DATABASES\\s*;?\\s*")) {
@@ -863,14 +844,14 @@ object GraftSql {
       import spark.implicits._
       val name = upper.trim.replaceAll("(?is)DESC(?:RIBE)?\\s+CATALOG\\s+", "")
         .stripSuffix(";").trim.toLowerCase
-      val isCurrent = currentNamedCatalog(spark).exists(_._1 == name)
-      namedCatalogs(spark).get(name) match {
+      val isCurrent = catalogs(spark).current.get.exists(_._1 == name)
+      catalogs(spark).named.get(name) match {
         case Some(pathOpt) =>
           Seq((name, pathOpt.fold("generic_in_memory")(_ => "graft"),
             isCurrent.toString, pathOpt.getOrElse("")))
             .toDF("catalog", "type", "current", "path")
         case None if Seq("default_catalog", "spark_catalog").contains(name) =>
-          Seq((name, "default", (currentNamedCatalog(spark).isEmpty).toString, ""))
+          Seq((name, "default", (catalogs(spark).current.get.isEmpty).toString, ""))
             .toDF("catalog", "type", "current", "path")
         case None => throw new IllegalArgumentException(
           s"catalog does not exist: $name")
@@ -901,7 +882,7 @@ object GraftSql {
           spark.sql(text) // real Spark database: Spark's own DESCRIBE
         case DescribeR(name0) =>
           val name = resolveNameOpt(spark, name0).get
-          graft.streaming.GraftDdl.sink(name) match {
+          graft.streaming.GraftDdl.sink(spark, name) match {
             case Some(sd) =>
               import spark.implicits._
               val schemaRows =
@@ -930,13 +911,13 @@ object GraftSql {
         .stripPrefix("CATALOG").trim.stripSuffix(";").trim.toLowerCase
       if (Seq("default_catalog", "default_database", "spark_catalog", "default")
           .contains(target)) {
-        currentCatalogBySession.remove(spark) // back to the default catalog
+        catalogs(spark).current.set(None) // back to the default catalog
         Seq((target, "in use")).toDF("name", "status")
       }
-      else if (namedCatalogs(spark).contains(target)) {
+      else if (catalogs(spark).named.contains(target)) {
         // a CREATE CATALOG-registered catalog becomes current: persistable
         // DDL is recorded there from now on (reference setCurrentCatalog)
-        currentCatalogBySession.put(spark, target -> namedCatalogs(spark)(target))
+        catalogs(spark).current.set(Some(target -> catalogs(spark).named(target)))
         Seq((target, "in use")).toDF("name", "status")
       }
       else spark.sql(text) // a real Spark database: Spark's own USE
@@ -961,7 +942,7 @@ object GraftSql {
       // streaming SELECTs drain via AvailableNow into the sink path.
       case InsertR(mode, name0, partTxt, select) =>
         resolveNameOpt(spark, name0)
-          .flatMap(n => graft.streaming.GraftDdl.sink(n).map(n -> _)) match {
+          .flatMap(n => graft.streaming.GraftDdl.sink(spark, n).map(n -> _)) match {
           case Some((name, sd)) =>
             executeInsert(spark, mode, name, sd, select, Option(partTxt))._1
           case None => spark.sql(text) // a real catalog table: Spark handles it
@@ -1006,7 +987,7 @@ object GraftSql {
         case None => TemporalSql.sql(spark, text) // throws on near-miss;
                                                   // spark.sql can't take it
       }
-    else if (TemporalFunction.recognizes(text))
+    else if (TemporalFunction.recognizes(spark, text))
       // a LATERAL TABLE call naming a REGISTERED temporal table function —
       // the 1.11 function form of the temporal join (`FROM Orders o,
       // LATERAL TABLE (Rates(o.rowtime)) r WHERE …`); a UDTF lateral with
@@ -1369,7 +1350,7 @@ object GraftSql {
             |SELECT o_orderpriority, count(*) AS n
             |FROM orders GROUP BY o_orderpriority""".stripMargin)
           .orderBy("o_orderpriority")
-      } finally resetNamedCatalogs()
+      } finally resetNamedCatalogs(s)
     },
     Some("""SELECT o_orderpriority, count(*) AS n FROM orders
            |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin))
@@ -1404,7 +1385,7 @@ object GraftSql {
         // TableResult's per-sink affected-row count), not the sink's
         // cumulative contents, which diverge for streaming-append sinks
         // and pre-populated paths (r6 ADVICE)
-        val rows = graft.streaming.GraftDdl.sink(name) match {
+        val rows = graft.streaming.GraftDdl.sink(spark, name) match {
           // a static PARTITION clause travels with its statement — the
           // two door entry points (run / StatementSet) must not diverge
           case Some(sd) => executeInsert(spark, "INTO", name, sd, select, partTxt)._2

@@ -274,7 +274,7 @@ object HiveDialect {
       cols: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val replace = mode.equalsIgnoreCase("REPLACE")
-    require(graft.streaming.GraftDdl.alterCols(name0.toLowerCase, cols, replace),
+    require(graft.streaming.GraftDdl.alterCols(spark, name0.toLowerCase, cols, replace),
       s"$name0 is not a registered table definition")
     Seq((name0, mode.toLowerCase + " columns")).toDF("name", "status")
   }
@@ -333,8 +333,9 @@ object HiveDialect {
   }
 
   /** Resolve a registered partitioned filesystem sink or fail clearly. */
-  private def partitionedSink(name0: String): graft.streaming.GraftDdl.SinkDef = {
-    val sd = graft.streaming.GraftDdl.sink(name0.toLowerCase).getOrElse(
+  private def partitionedSink(spark: SparkSession,
+      name0: String): graft.streaming.GraftDdl.SinkDef = {
+    val sd = graft.streaming.GraftDdl.sink(spark, name0.toLowerCase).getOrElse(
       throw new IllegalArgumentException(
         s"$name0 is not a registered filesystem sink"))
     require(sd.partitions.nonEmpty,
@@ -347,7 +348,7 @@ object HiveDialect {
   def renamePartition(spark: SparkSession, name0: String, fromSpec: String,
       toSpec: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val sd = partitionedSink(name0)
+    val sd = partitionedSink(spark, name0)
     val root = new org.apache.hadoop.fs.Path(sd.path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val from = specRelPath(fromSpec, sd)
@@ -373,7 +374,7 @@ object HiveDialect {
       lenient: Boolean, specsTxt0: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val specsTxt = specsTxt0.trim.stripSuffix(";").trim
-    val sd = partitionedSink(name0)
+    val sd = partitionedSink(spark, name0)
     val specs = parseSpecs(specsTxt)
     val root = new org.apache.hadoop.fs.Path(sd.path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

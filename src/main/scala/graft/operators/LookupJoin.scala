@@ -278,7 +278,7 @@ object LookupJoin {
            |      'lookup.cache.ttl' = '10 min',
            |      'lookup.async.capacity' = '8')""".stripMargin)
       val opts = lookupOptions(
-        graft.streaming.GraftDdl.tableOptions("graft_jdbc_dim").get)
+        graft.streaming.GraftDdl.tableOptions(s, "graft_jdbc_dim").get)
       val probe = Tables.t(s, dir, "events")
         .select($"event_id", $"user_id").as[(Long, Long)]
       lookupJoinAsyncCached(probe, () => new CsvFileBackend(csvFile), opts)

@@ -13,20 +13,16 @@ import org.apache.spark.storage.StorageLevel
   * analogue: first consumer computes and persists (memory, disk spill),
   * later consumers reuse the same persisted plan.
   *
-  * Keyed by (session, logical name) — SparkSession keeps Object's identity
-  * equals/hashCode — so a fresh session (tests, new driver run) never sees
-  * another session's plans; entries owned by stopped sessions are dropped
-  * on the next call.
+  * Each session keeps its own plans, by logical name ([[graft.SessionScoped]]),
+  * so a fresh session (tests, new driver run) never sees another session's
+  * plans.
   */
 object Materialized {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val cache = new graft.SessionScoped(
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
 
   def of(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    // evict plans owned by stopped sessions: their cached blocks died with
-    // the context, keeping the refs would only leak plans
-    cache.keySet.removeIf(_._1.sparkContext.isStopped)
     // NOT computeIfAbsent: derived entries build on top of other entries
     // (shinglesCapped -> shingles), and a nested computeIfAbsent on the
     // same map throws IllegalStateException("Recursive update") whenever
@@ -34,11 +30,11 @@ object Materialized {
     // bench warm-ups always touched the base relations first. get +
     // putIfAbsent keeps memoization (worst case one redundant build races,
     // the loser's persist is unwound) and is reentrancy-safe.
-    val k = (spark, key)
-    val hit = cache.get(k)
+    val plans = cache(spark)
+    val hit = plans.get(key)
     if (hit != null) return hit
     val built = build.persist(StorageLevel.MEMORY_AND_DISK)
-    val prev = cache.putIfAbsent(k, built)
+    val prev = plans.putIfAbsent(key, built)
     // when the putIfAbsent races, do NOT unpersist the loser: CacheManager
     // keys cached blocks by the ANALYZED PLAN, and both builds of the same
     // key analyze to the same plan — the loser's unpersist would evict the
@@ -47,8 +43,4 @@ object Materialized {
     // dropping the reference leaks nothing.
     if (prev != null) prev else built
   }
-
-  /** Drop one session's entries (test isolation). */
-  def clear(spark: SparkSession): Unit =
-    cache.keySet.removeIf(_._1 eq spark)
 }

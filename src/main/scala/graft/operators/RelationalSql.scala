@@ -246,11 +246,9 @@ object RelationalSql {
     * rows fall below the WHERE guard — the loop-unrolling twin of
     * `IterateOps.iterate`. */
   /** One cloned session per (parent session, input dir), carrying the
-    * raised recursion valve — see [[qRecursiveCte]]. Keyed on the parent
-    * itself (identity equals/hashCode); entries of stopped contexts are
-    * dropped like Tables' plan cache. */
-  private val recursionSessions = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.SparkSession]()
+    * raised recursion valve — see [[qRecursiveCte]]. */
+  private val recursionSessions = new graft.SessionScoped(
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.SparkSession]())
 
   val qRecursiveCte: Q = Q(
     "q_recursive_cte",
@@ -276,9 +274,8 @@ object RelationalSql {
       // the raised valve whenever the caller acts on it, the parent
       // session's valve is untouched, and the write-then-read disappears —
       // the plan is the recursion itself, distributed and heap-flat.
-      val sub = {
-        recursionSessions.keySet.removeIf(_._1.sparkContext.isStopped)
-        recursionSessions.computeIfAbsent((s, dir), _ => {
+      val sub =
+        recursionSessions(s).computeIfAbsent(dir, _ => {
           val ns = s.newSession()
           // newSession starts from the context defaults, not the parent's
           // runtime conf — copy every modifiable conf so the recursion
@@ -292,7 +289,6 @@ object RelationalSql {
             math.max(20000000L, inputRows * 8L).toString)
           ns
         })
-      }
       Tables.registerAll(sub, dir)
       sub.sql("""WITH RECURSIVE it AS (
         |  SELECT l_orderkey AS ok, l_linenumber AS ln,

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.concurrent.TrieMap
 
 /** The reference's TEMPORAL TABLE FUNCTION surface — the 1.11-era sibling
   * of `FOR SYSTEM_TIME AS OF` (reference
@@ -36,22 +37,23 @@ object TemporalFunction {
     * attribute + primary key). */
   final case class TemporalFn(history: DataFrame, timeAttr: String, primaryKey: String)
 
-  private val registry =
-    scala.collection.concurrent.TrieMap[String, TemporalFn]()
+  private val registry = new graft.SessionScoped(TrieMap[String, TemporalFn]())
 
   /** Table-API registration (reference Table.createTemporalTableFunction +
     * TableEnvironment.registerFunction): `history` versioned by `timeAttr`,
-    * keyed by `primaryKey`, callable as `name(<time>)` in LATERAL TABLE. */
+    * keyed by `primaryKey`, callable as `name(<time>)` in LATERAL TABLE —
+    * in `history`'s session only, like the reference's FunctionCatalog. */
   def createTemporalTableFunction(name: String, history: DataFrame,
       timeAttr: String, primaryKey: String): Unit = {
     require(history.columns.contains(timeAttr),
       s"time attribute '$timeAttr' not in history schema ${history.columns.mkString("(", ", ", ")")}")
     require(history.columns.contains(primaryKey),
       s"primary key '$primaryKey' not in history schema ${history.columns.mkString("(", ", ", ")")}")
-    registry(name.toLowerCase) = TemporalFn(history, timeAttr, primaryKey)
+    registry(history.sparkSession)(name.toLowerCase) = TemporalFn(history, timeAttr, primaryKey)
   }
 
-  def get(name: String): Option[TemporalFn] = registry.get(name.toLowerCase)
+  def get(spark: SparkSession, name: String): Option[TemporalFn] =
+    registry(spark).get(name.toLowerCase)
 
   /** Table-API correlate (reference Table.joinLateral(rates($"rowtime"),
     * $"k" === $"pk")): probe each row of `probe` against the function's
@@ -63,7 +65,7 @@ object TemporalFunction {
     * the comma-join form. */
   def joinLateral(probe: DataFrame, fnName: String, probeTs: String,
       probeKey: String): DataFrame = {
-    val fn = get(fnName).getOrElse(throw new IllegalArgumentException(
+    val fn = get(probe.sparkSession, fnName).getOrElse(throw new IllegalArgumentException(
       s"unknown temporal table function '$fnName' — " +
         "createTemporalTableFunction first"))
     val joined = TemporalSql.temporalJoin(probe, fn.history,
@@ -87,7 +89,7 @@ object TemporalFunction {
     * [[joinLateral]]. */
   def joinLatest(probe: DataFrame, fnName: String, probeKey: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, max_by, struct}
-    val fn = TemporalFunction.get(fnName).getOrElse(throw new IllegalArgumentException(
+    val fn = get(probe.sparkSession, fnName).getOrElse(throw new IllegalArgumentException(
       s"unknown temporal table function '$fnName' — " +
         "createTemporalTableFunction first"))
     val hist = fn.history
@@ -113,8 +115,8 @@ object TemporalFunction {
     * table function — the door's routing predicate (a UDTF lateral with the
     * same grammar belongs to [[LateralSql]], exactly the reference's
     * function-catalog kind check at Correlate planning time). */
-  def recognizes(text: String): Boolean = text match {
-    case StmtR(_, _, _, fnName, _, _, _, _, _, _) => get(fnName).isDefined
+  def recognizes(spark: SparkSession, text: String): Boolean = text match {
+    case StmtR(_, _, _, fnName, _, _, _, _, _, _) => get(spark, fnName).isDefined
     case _ => false
   }
 
@@ -123,7 +125,7 @@ object TemporalFunction {
   def sql(spark: SparkSession, text: String): DataFrame = text match {
     case StmtR(items, probeV, pAlias, fnName, tsAlias, tsCol, bAlias,
         whereTxt, groupTxt, orderTxt) =>
-      val fn = get(fnName).getOrElse(throw new IllegalArgumentException(
+      val fn = get(spark, fnName).getOrElse(throw new IllegalArgumentException(
         s"unknown temporal table function '$fnName'"))
       require(tsAlias.equalsIgnoreCase(pAlias),
         s"temporal function argument must be the probe's time attribute " +

@@ -38,7 +38,7 @@ object GraftCatalog {
     // replay never depends on the base table restoring first — the same
     // reason the reference stores resolved CatalogTable metadata, not the
     // LIKE clause (FLIP-110)
-    persist(catalogDir, name, GraftDdl.resolveDdl(ddl))
+    persist(catalogDir, name, GraftDdl.resolveDdl(spark, ddl))
     name
   }
 
@@ -74,7 +74,7 @@ object GraftCatalog {
     graft.operators.GraftSql.runNoRecord(spark, ddl) // validate + register first
     // LIKE resolves to a self-contained CREATE TABLE before persisting
     // (see executeDdl); other DDL classes pass through resolveDdl unchanged
-    persist(catalogDir, name, GraftDdl.resolveDdl(ddl))
+    persist(catalogDir, name, GraftDdl.resolveDdl(spark, ddl))
     name
   }
 
@@ -82,9 +82,9 @@ object GraftCatalog {
     * door's `CREATE CATALOG`/`USE CATALOG` routing (GraftSql validates and
     * executes first, then records here). Returns the recorded name; None
     * when the text is not one of the three persistable classes. */
-  def record(catalogDir: String, ddl: String): Option[String] =
+  def record(spark: SparkSession, catalogDir: String, ddl: String): Option[String] =
     classify(ddl).map { case (_, name) =>
-      persist(catalogDir, name, GraftDdl.resolveDdl(ddl))
+      persist(catalogDir, name, GraftDdl.resolveDdl(spark, ddl))
       name
     }
 

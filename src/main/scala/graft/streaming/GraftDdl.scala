@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 
 /** The reference's CREATE TABLE text surface (flink-sql-parser
@@ -88,19 +88,21 @@ object GraftDdl {
       case _ => None
     }
 
-  /** Registered definition of every table this session created — what LIKE
+  /** Registered definition of every table a session created — what LIKE
     * clones (the reference resolves LIKE against CatalogTable metadata the
-    * same way: SqlCreateTable.java:56 + FLIP-110 merge rules). */
+    * same way: SqlCreateTable.java:56 + FLIP-110 merge rules). Per session,
+    * like the reference's CatalogManager: another session cannot see it. */
   final case class TableDef(cols: String, opts: Map[String, String],
       partitions: Seq[String] = Nil)
-  private val defs = scala.collection.concurrent.TrieMap[String, TableDef]()
+  private val defs =
+    new graft.SessionScoped(scala.collection.concurrent.TrieMap[String, TableDef]())
 
   /** WITH options of a declared table — how runtime operators read
     * connector knobs the DDL carried (the reference resolves e.g.
     * `lookup.cache.max-rows` from the CatalogTable's options the same
     * way: JdbcDynamicTableFactory.java reads them off the table config). */
-  def tableOptions(name: String): Option[Map[String, String]] =
-    defs.get(name.toLowerCase).map(_.opts)
+  def tableOptions(spark: SparkSession, name: String): Option[Map[String, String]] =
+    defs(spark).get(name.toLowerCase).map(_.opts)
 
   /** Resolve `CREATE TABLE … LIKE base (…)` into a SELF-CONTAINED CREATE
     * TABLE against the base's registered definition; non-LIKE DDL passes
@@ -117,9 +119,9 @@ object GraftDdl {
     * / `EXCLUDING ALL` set the default for every feature at once. A WITH
     * option redeclared on the derived table without OVERWRITING OPTIONS is
     * an error. Extra declared columns append after the base's. */
-  def resolveDdl(ddl: String): String = ddl.trim match {
+  def resolveDdl(spark: SparkSession, ddl: String): String = ddl.trim match {
     case LikeR(name, extraCols, optsTxt, baseName, likeOpts) =>
-      val base = defs.getOrElse(baseName.toLowerCase,
+      val base = defs(spark).getOrElse(baseName.toLowerCase,
         throw new IllegalArgumentException(
           s"CREATE TABLE $name LIKE $baseName: unknown base table '$baseName'"))
       val likeU = Option(likeOpts).getOrElse("").toUpperCase
@@ -202,7 +204,7 @@ object GraftDdl {
     * `CREATE TABLE … LIKE` resolves against the base definition first.
     * Returns the registered name. */
   def executeDdl(spark: SparkSession, ddl: String): String =
-    resolveDdl(ddl) match {
+    resolveDdl(spark, ddl) match {
       case TablePartR(name, cols, partTxt, optsTxt) =>
         registerTable(spark, name, cols,
           partTxt.split(",").map(_.trim).filter(_.nonEmpty).toSeq, optsTxt)
@@ -215,7 +217,7 @@ object GraftDdl {
   private def registerTable(spark: SparkSession, name: String, cols: String,
       partitions: Seq[String], optsTxt: String): String = {
         val opts = parseOpts(optsTxt)
-        defs(name.toLowerCase) = TableDef(cols.trim, opts, partitions)
+        defs(spark)(name.toLowerCase) = TableDef(cols.trim, opts, partitions)
         val computed = computedColumns(cols)
         // Kafka dynamic table (reference flink-connector-kafka
         // KafkaDynamicTableFactory.java: 'connector'='kafka', 'topic',
@@ -291,7 +293,7 @@ object GraftDdl {
             // utility sinks (reference PrintTableSinkFactory /
             // BlackHoleTableSinkFactory): pathless — INSERT INTO prints on
             // the executors / discards, handled by the door's executeInsert
-            sinks(name.toLowerCase) =
+            sinks(spark)(name.toLowerCase) =
               SinkDef("", opts("connector"), primaryKeyOf(cols))
             name
           case None => opts.get("format") match {
@@ -336,7 +338,7 @@ object GraftDdl {
             case _ =>
               val path = opts.getOrElse("path",
                 throw new IllegalArgumentException("WITH option 'path' is required"))
-              sinks(name.toLowerCase) =
+              sinks(spark)(name.toLowerCase) =
                 SinkDef(path, opts.getOrElse("format", "parquet"),
                   primaryKeyOf(cols), partitions, opts)
               name
@@ -385,31 +387,34 @@ object GraftDdl {
       .map(_.group(1).split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Nil)
 
-  private val sinks = scala.collection.concurrent.TrieMap[String, SinkDef]()
+  private val sinks =
+    new graft.SessionScoped(scala.collection.concurrent.TrieMap[String, SinkDef]())
 
-  /** Look up a sink registered by a CREATE TABLE … WITH (…) DDL. */
-  def sink(name: String): Option[SinkDef] = sinks.get(name.toLowerCase)
+  /** Look up a sink `spark` registered by a CREATE TABLE … WITH (…) DDL. */
+  def sink(spark: SparkSession, name: String): Option[SinkDef] =
+    sinks(spark).get(name.toLowerCase)
 
   /** Unregister a sink — the DROP TABLE half of the DDL lifecycle (reference
     * DropTableOperation, SqlCommandParser.java:113). True iff it existed. */
-  def dropSink(name: String): Boolean = sinks.remove(name.toLowerCase).isDefined
+  def dropSink(spark: SparkSession, name: String): Boolean =
+    sinks(spark).remove(name.toLowerCase).isDefined
 
   /** `ALTER TABLE a RENAME TO b` on a registered sink (reference
     * SqlAlterTableRename.java). True iff `from` existed. */
-  def renameSink(from: String, to: String): Boolean =
-    sinks.remove(from.toLowerCase) match {
-      case Some(sd) => sinks(to.toLowerCase) = sd; true
+  def renameSink(spark: SparkSession, from: String, to: String): Boolean =
+    sinks(spark).remove(from.toLowerCase) match {
+      case Some(sd) => sinks(spark)(to.toLowerCase) = sd; true
       case None => false
     }
 
   /** `ALTER TABLE name SET ('k'='v', …)` on a registered sink (reference
     * SqlAlterTableProperties — 1.11's table-options alter): merge the given
     * options into the SinkDef. True iff the sink existed. */
-  def alterSink(name: String, optsTxt: String): Boolean =
-    sinks.get(name.toLowerCase) match {
+  def alterSink(spark: SparkSession, name: String, optsTxt: String): Boolean =
+    sinks(spark).get(name.toLowerCase) match {
       case Some(sd) =>
         val opts = parseOpts(optsTxt)
-        sinks(name.toLowerCase) = SinkDef(
+        sinks(spark)(name.toLowerCase) = SinkDef(
           opts.getOrElse("path", sd.path), opts.getOrElse("format", sd.format),
           sd.primaryKey, sd.partitions, sd.opts ++ opts)
         true
@@ -428,8 +433,9 @@ object GraftDdl {
     * schema-on-write (parquet merges by name), so this is metadata surgery
     * exactly like the reference's catalog update. Returns false when the
     * name is not a registered definition. */
-  def alterCols(name: String, newCols: String, replace: Boolean): Boolean =
-    defs.get(name.toLowerCase) match {
+  def alterCols(spark: SparkSession, name: String, newCols: String,
+      replace: Boolean): Boolean =
+    defs(spark).get(name.toLowerCase) match {
       case Some(d) =>
         val partSet = d.partitions.map(_.toLowerCase).toSet
         def isPartDef(c: String) =
@@ -445,18 +451,18 @@ object GraftDdl {
           if (replace) Seq(newCols.trim)
           else (prefix :+ newCols.trim).filter(_.nonEmpty)
         val cols = (newPrefix ++ partTail).mkString(", ")
-        defs(name.toLowerCase) = d.copy(cols = cols)
+        defs(spark)(name.toLowerCase) = d.copy(cols = cols)
         true
       case None => false
     }
 
   /** Declared column text of a registered definition (for assertions and
     * DESCRIBE-style listings). */
-  def tableCols(name: String): Option[String] =
-    defs.get(name.toLowerCase).map(_.cols)
+  def tableCols(spark: SparkSession, name: String): Option[String] =
+    defs(spark).get(name.toLowerCase).map(_.cols)
 
   /** Names of every registered sink; SHOW TABLES merges these with the Spark
     * catalog's views (the reference lists sources and sinks alike — both are
     * catalog tables there). */
-  def sinkNames: Seq[String] = sinks.keys.toSeq
+  def sinkNames(spark: SparkSession): Seq[String] = sinks(spark).keys.toSeq
 }

@@ -157,23 +157,20 @@ object StreamingOps {
 
   def runToMemory(spark: SparkSession, stream: DataFrame, mode: String, name: String): DataFrame = {
     val ckpt = freshCheckpoint(name)
+    // start inside the try: a query Spark rejects at start() has already
+    // created its checkpoint dir
+    def drain(writer: DataStreamWriter[_]): StreamingQuery =
+      try {
+        val q = startQuery(spark, writer.trigger(Trigger.AvailableNow()), ckpt)
+        q.awaitTermination()
+        q
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     if (mode == "append" && spark.conf.get(SinkKey, "memory") == "parquet") {
       val out = Tables.scratch(s"stream-sink/$name-${java.util.UUID.randomUUID()}")
-      val q = startQuery(spark, stream.writeStream
-        .format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()), ckpt)
-      try q.awaitTermination()
-      finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      drain(stream.writeStream.format("parquet").option("path", out).outputMode("append"))
       return spark.read.schema(stream.schema).parquet(out)
     }
-    val q = startQuery(spark, stream.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow()), ckpt)
-    try q.awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    val q = drain(stream.writeStream.format("memory").queryName(name).outputMode(mode))
     if (mode == "update") {
       val dataBatches = q.recentProgress.count(_.numInputRows > 0)
       require(dataBatches <= 1,

@@ -147,11 +147,10 @@ object TwsOps {
     * TwS in a fresh session dies with RpcEndpointNotFoundException).
     * Run a one-row stateful memory stream once per session to register it. */
   private val coordinatorWarmed =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-  private[graft] def ensureStateCoordinator(s: SparkSession): Unit =
-    if (!coordinatorWarmed.contains(s)) {
+    new graft.SessionScoped(new java.util.concurrent.atomic.AtomicBoolean())
+  private[graft] def ensureStateCoordinator(s: SparkSession): Unit = {
+    val warmed = coordinatorWarmed(s)
+    if (!warmed.get) {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
       val name = s"graft_state_coord_warm_${java.util.UUID.randomUUID().toString.take(8)}"
@@ -160,9 +159,9 @@ object TwsOps {
         .format("memory").queryName(name).outputMode("complete"))
       try { mem.addData(1L); q.processAllAvailable() }
       finally { q.stop(); s.catalog.dropTempView(name); () }
-      coordinatorWarmed.add(s)
-      ()
+      warmed.set(true)
     }
+  }
 
   /** q_tws_dedup: same answer as q_stream_dedup (DISTINCT user_id ×
     * event_type) but computed by the transformWithState runtime — named

@@ -14,8 +14,8 @@ class AlterDdlSpec extends GraftSpec {
     GraftSql.run(spark,
       s"CREATE TABLE alt_t1 (k STRING, n BIGINT) WITH ('path' = '$sink', 'format' = 'parquet')")
     GraftSql.run(spark, "ALTER TABLE alt_t1 RENAME TO alt_t2")
-    assert(graft.streaming.GraftDdl.sink("alt_t2").isDefined)
-    assert(graft.streaming.GraftDdl.sink("alt_t1").isEmpty)
+    assert(graft.streaming.GraftDdl.sink(spark, "alt_t2").isDefined)
+    assert(graft.streaming.GraftDdl.sink(spark, "alt_t1").isEmpty)
     import spark.implicits._
     Seq(("a", 1L)).toDF("k", "n").createOrReplaceTempView("alt_src")
     val out = GraftSql.run(spark, "INSERT INTO alt_t2 SELECT k, n FROM alt_src")
@@ -55,7 +55,7 @@ class AlterDdlSpec extends GraftSpec {
   }
 
   test("rename under a current persistent catalog unrecords the old definition") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft-alter-cat").toString
     GraftSql.run(spark, s"CREATE CATALOG alt_cat WITH ('type'='graft', 'path'='$dir')")
     GraftSql.run(spark, "USE CATALOG alt_cat")
@@ -65,6 +65,6 @@ class AlterDdlSpec extends GraftSpec {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "alt_v4.ddl")),
       "old definition survived the rename — replay would resurrect it")
     GraftSql.run(spark, "DROP VIEW alt_v5")
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
   }
 }

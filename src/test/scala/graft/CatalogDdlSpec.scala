@@ -12,12 +12,12 @@ class CatalogDdlSpec extends GraftSpec {
     java.nio.file.Files.createTempDirectory(s"graft-cat-$tag").toString
 
   override def afterAll(): Unit = {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     super.afterAll()
   }
 
   test("persistent catalog records DDL while current and replays it on re-registration") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     val dir = freshDir("persist")
     GraftSql.run(spark, s"CREATE CATALOG cat1 WITH ('type'='graft', 'path'='$dir')")
     GraftSql.run(spark, "USE CATALOG cat1")
@@ -27,18 +27,18 @@ class CatalogDdlSpec extends GraftSpec {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "cat_t1.ddl")),
       "DDL not recorded in the current persistent catalog")
     // a fresh 'session': forget everything, re-register the catalog → replay
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     spark.sql("DROP TABLE IF EXISTS cat_t1")
     GraftSql.run(spark, "DROP VIEW IF EXISTS cat_t1")
     GraftSql.run(spark, s"CREATE CATALOG cat1b WITH ('type'='graft', 'path'='$dir')")
     // the sink table is back in the registry: DESCRIBE answers
     val desc = GraftSql.run(spark, "DESCRIBE cat_t1").collect()
     assert(desc.nonEmpty, "replayed catalog did not restore the sink table")
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
   }
 
   test("DROP of an object while a persistent catalog is current removes its stored DDL") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     val dir = freshDir("drop")
     GraftSql.run(spark, s"CREATE CATALOG cat2 WITH ('type'='graft', 'path'='$dir')")
     GraftSql.run(spark, "USE CATALOG cat2")
@@ -47,11 +47,11 @@ class CatalogDdlSpec extends GraftSpec {
     GraftSql.run(spark, "DROP VIEW cat_v1")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "cat_v1.ddl")),
       "stored definition survived the DROP")
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
   }
 
   test("RENAME under a persistent catalog re-records the object under its NEW name") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     val dir = freshDir("rename")
     GraftSql.run(spark, s"CREATE CATALOG catr WITH ('type'='graft', 'path'='$dir')")
     GraftSql.run(spark, "USE CATALOG catr")
@@ -66,26 +66,25 @@ class CatalogDdlSpec extends GraftSpec {
       java.nio.file.Paths.get(dir, "ren_b.ddl"))
     assert(stored.toLowerCase.contains("create table ren_b"), stored)
     // a fresh session re-opening the catalog restores the RENAMED object
-    GraftSql.resetNamedCatalogs()
-    graft.streaming.GraftDdl.dropSink("ren_b")
-    GraftSql.run(spark, s"CREATE CATALOG catr2 WITH ('type'='graft', 'path'='$dir')")
-    assert(graft.streaming.GraftDdl.sink("ren_b").isDefined,
+    GraftSql.resetNamedCatalogs(spark)
+    val fresh = spark.newSession()
+    assert(graft.streaming.GraftDdl.sink(fresh, "ren_b").isEmpty)
+    GraftSql.run(fresh, s"CREATE CATALOG catr2 WITH ('type'='graft', 'path'='$dir')")
+    assert(graft.streaming.GraftDdl.sink(fresh, "ren_b").isDefined,
       "re-opened catalog must expose the object under its new name")
     // views rename the same way (re-persisted from the retained body)
-    GraftSql.run(spark, "USE CATALOG catr2")
-    GraftSql.run(spark, "CREATE VIEW ren_v1 AS SELECT 1 AS one")
-    GraftSql.run(spark, "ALTER VIEW ren_v1 RENAME TO ren_v2")
+    GraftSql.run(fresh, "USE CATALOG catr2")
+    GraftSql.run(fresh, "CREATE VIEW ren_v1 AS SELECT 1 AS one")
+    GraftSql.run(fresh, "ALTER VIEW ren_v1 RENAME TO ren_v2")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "ren_v1.ddl")))
     val storedV = java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "ren_v2.ddl"))
     assert(storedV.toLowerCase.contains("ren_v2"), storedV)
-    spark.catalog.dropTempView("ren_v2")
-    graft.streaming.GraftDdl.dropSink("ren_b")
-    GraftSql.resetNamedCatalogs()
+    GraftSql.run(spark, "DROP TABLE ren_b")
   }
 
   test("named catalogs and the current-catalog pointer are PER-SESSION state") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     val dir = freshDir("scoped")
     GraftSql.run(spark, s"CREATE CATALOG cat_s1 WITH ('type'='graft', 'path'='$dir')")
     GraftSql.run(spark, "USE CATALOG cat_s1")
@@ -101,12 +100,11 @@ class CatalogDdlSpec extends GraftSpec {
       s"CREATE TABLE scoped_t (k BIGINT) WITH ('path' = '$sink', 'format' = 'parquet')")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "scoped_t.ddl")),
       "cross-session DDL must not be recorded into another session's catalog")
-    graft.streaming.GraftDdl.dropSink("scoped_t")
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
   }
 
   test("generic_in_memory catalog persists nothing; SHOW CATALOGS lists registered names") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     GraftSql.run(spark, "CREATE CATALOG mem1 WITH ('type'='generic_in_memory')")
     val names = GraftSql.run(spark, "SHOW CATALOGS").collect().map(_.getString(0)).toSet
     assert(names.contains("mem1") && names.contains("default_catalog"), names)
@@ -118,11 +116,11 @@ class CatalogDdlSpec extends GraftSpec {
     assert(!GraftSql.run(spark, "SHOW CATALOGS").collect()
       .map(_.getString(0)).contains("mem1"))
     GraftSql.run(spark, "DROP VIEW cat_v2")
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
   }
 
   test("the current catalog cannot be dropped; unknown types and missing options error") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     GraftSql.run(spark, "CREATE CATALOG mem2 WITH ('type'='generic_in_memory')")
     GraftSql.run(spark, "USE CATALOG mem2")
     val e = intercept[IllegalArgumentException] {
@@ -141,11 +139,11 @@ class CatalogDdlSpec extends GraftSpec {
       GraftSql.run(spark, "DROP CATALOG never_existed")
     }.getMessage.contains("does not exist"))
     GraftSql.run(spark, "DROP CATALOG IF EXISTS never_existed") // no error
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
   }
 
   test("recording follows SESSION truth: ALTER VIEW AS re-records, IF NOT EXISTS no-op and plain-Spark fallthrough record nothing") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     val dir = freshDir("truth")
     GraftSql.run(spark, s"CREATE CATALOG cat_tr WITH ('type'='graft', 'path'='$dir')")
     GraftSql.run(spark, "USE CATALOG cat_tr")
@@ -170,11 +168,11 @@ class CatalogDdlSpec extends GraftSpec {
     spark.sql("DROP TABLE tr_plain")
     GraftSql.run(spark, "DROP VIEW tr_v")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "tr_v.ddl")))
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
   }
 
   test("DESCRIBE CATALOG and DESCRIBE DATABASE answer; unknown names error") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     val dir = freshDir("desc")
     GraftSql.run(spark, s"CREATE CATALOG desc_cat WITH ('type'='graft', 'path'='$dir')")
     GraftSql.run(spark, "USE CATALOG desc_cat")
@@ -192,24 +190,24 @@ class CatalogDdlSpec extends GraftSpec {
     assert(intercept[IllegalArgumentException] {
       GraftSql.run(spark, "DESCRIBE DATABASE no_such_db")
     }.getMessage.contains("does not exist"))
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
   }
 
   test("restore never re-records: replay through a catalog leaves other catalogs untouched") {
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     val dirA = freshDir("a")
     val dirB = freshDir("b")
     GraftSql.run(spark, s"CREATE CATALOG catA WITH ('type'='graft', 'path'='$dirA')")
     GraftSql.run(spark, "USE CATALOG catA")
     GraftSql.run(spark, "CREATE VIEW cat_v3 AS SELECT 3 AS three")
     // now switch current to B and re-open A: A's replay must not copy into B
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
     GraftSql.run(spark, s"CREATE CATALOG catB WITH ('type'='graft', 'path'='$dirB')")
     GraftSql.run(spark, "USE CATALOG catB")
     GraftSql.run(spark, s"CREATE CATALOG catA2 WITH ('type'='graft', 'path'='$dirA')")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dirB, "cat_v3.ddl")),
       "replaying catalog A cross-recorded its objects into current catalog B")
     GraftSql.run(spark, "DROP VIEW cat_v3")
-    GraftSql.resetNamedCatalogs()
+    GraftSql.resetNamedCatalogs(spark)
   }
 }

@@ -43,7 +43,7 @@ class DdlFeatureSpec extends GraftSpec {
     GraftDdl.executeDdl(spark,
       "CREATE TABLE like_base (a BIGINT, b STRING) " +
         "WITH ('path' = '/tmp/like-a', 'format' = 'parquet')")
-    val resolved = GraftDdl.resolveDdl(
+    val resolved = GraftDdl.resolveDdl(spark,
       "CREATE TABLE like_derived WITH ('path' = '/tmp/like-b') " +
         "LIKE like_base (OVERWRITING OPTIONS)")
     assert(resolved.contains("'path' = '/tmp/like-b'"))
@@ -53,8 +53,8 @@ class DdlFeatureSpec extends GraftSpec {
       "CREATE TABLE like_derived WITH ('path' = '/tmp/like-b') " +
         "LIKE like_base (OVERWRITING OPTIONS)")
     assert(name == "like_derived")
-    assert(GraftDdl.sink("like_derived").get.path == "/tmp/like-b")
-    assert(GraftDdl.sink("like_derived").get.format == "parquet")
+    assert(GraftDdl.sink(spark, "like_derived").get.path == "/tmp/like-b")
+    assert(GraftDdl.sink(spark, "like_derived").get.format == "parquet")
   }
 
   test("LIKE without OVERWRITING OPTIONS rejects a redeclared option") {
@@ -73,14 +73,14 @@ class DdlFeatureSpec extends GraftSpec {
          |  event_id BIGINT, ts TIMESTAMP,
          |  WATERMARK FOR ts AS ts - INTERVAL '5' SECONDS
          |) WITH ('path' = '$sfDir', 'table' = 'events')""".stripMargin)
-    val resolved = GraftDdl.resolveDdl(
+    val resolved = GraftDdl.resolveDdl(spark,
       "CREATE TABLE like_wmd (WATERMARK FOR ts AS ts - INTERVAL '60' SECONDS) " +
         "WITH ('path' = '/tmp/like-wm2') LIKE like_wmbase (OVERWRITING OPTIONS, OVERWRITING WATERMARKS)")
     assert(resolved.contains("'60' SECONDS"), resolved)
     assert(!resolved.contains("'5' SECONDS"),
       s"base watermark must not survive OVERWRITING WATERMARKS:\n$resolved")
     val e = intercept[IllegalArgumentException] {
-      GraftDdl.resolveDdl(
+      GraftDdl.resolveDdl(spark,
         "CREATE TABLE like_wmd2 (WATERMARK FOR ts AS ts - INTERVAL '60' SECONDS) " +
           "WITH ('path' = '/tmp/like-wm3') LIKE like_wmbase (OVERWRITING OPTIONS)")
     }
@@ -91,7 +91,7 @@ class DdlFeatureSpec extends GraftSpec {
     GraftDdl.executeDdl(spark,
       "CREATE TABLE like_pkbase (k BIGINT, v STRING, PRIMARY KEY (k) NOT ENFORCED) " +
         "WITH ('path' = '/tmp/like-pk', 'format' = 'parquet')")
-    val resolved = GraftDdl.resolveDdl(
+    val resolved = GraftDdl.resolveDdl(spark,
       "CREATE TABLE like_pkd (PRIMARY KEY (v) NOT ENFORCED) " +
         "WITH ('path' = '/tmp/like-pk2') LIKE like_pkbase (OVERWRITING OPTIONS, OVERWRITING CONSTRAINTS)")
     assert(resolved.contains("PRIMARY KEY (v)"), resolved)
@@ -106,7 +106,7 @@ class DdlFeatureSpec extends GraftSpec {
          |  PRIMARY KEY (event_id) NOT ENFORCED,
          |  WATERMARK FOR ts AS ts - INTERVAL '5' SECONDS
          |) WITH ('path' = '$sfDir', 'table' = 'events')""".stripMargin)
-    val resolved = GraftDdl.resolveDdl(
+    val resolved = GraftDdl.resolveDdl(spark,
       "CREATE TABLE like_xall WITH ('path' = '/tmp/like-xall') " +
         "LIKE like_feat (EXCLUDING ALL)")
     // physical schema ALWAYS inherits (MergeTableLikeUtil); features drop
@@ -119,7 +119,7 @@ class DdlFeatureSpec extends GraftSpec {
   }
 
   test("LIKE per-feature strategies: EXCLUDING WATERMARKS keeps computed cols and constraints") {
-    val resolved = GraftDdl.resolveDdl(
+    val resolved = GraftDdl.resolveDdl(spark,
       "CREATE TABLE like_nowm WITH ('path' = '/tmp/like-nowm') " +
         "LIKE like_feat (EXCLUDING WATERMARKS, OVERWRITING OPTIONS)")
     assert(!resolved.toUpperCase.contains("WATERMARK"))
@@ -135,12 +135,12 @@ class DdlFeatureSpec extends GraftSpec {
         "LIKE like_feat (EXCLUDING ALL)")
     assert(name == "like_xall_sink")
     // no watermark clause survives → registers as a sink with the derived path
-    assert(GraftDdl.sink("like_xall_sink").get.path == "/tmp/like-xall-s")
+    assert(GraftDdl.sink(spark, "like_xall_sink").get.path == "/tmp/like-xall-s")
   }
 
   test("LIKE of an unknown base is a clear error") {
     val e = intercept[IllegalArgumentException] {
-      GraftDdl.resolveDdl("CREATE TABLE d WITH ('path' = '/x') LIKE nope")
+      GraftDdl.resolveDdl(spark, "CREATE TABLE d WITH ('path' = '/x') LIKE nope")
     }
     assert(e.getMessage.contains("unknown base table"))
   }
@@ -150,14 +150,14 @@ class DdlFeatureSpec extends GraftSpec {
       """CREATE TABLE pk_sink (k BIGINT, g STRING, v DOUBLE,
         |  PRIMARY KEY (k, g) NOT ENFORCED)
         |WITH ('path' = '/tmp/pk-sink', 'format' = 'parquet')""".stripMargin)
-    assert(GraftDdl.sink("pk_sink").get.primaryKey == Seq("k", "g"))
-    GraftDdl.alterSink("pk_sink", "'path' = '/tmp/pk-sink-2'")
-    assert(GraftDdl.sink("pk_sink").get.primaryKey == Seq("k", "g"))
-    assert(GraftDdl.sink("pk_sink").get.path == "/tmp/pk-sink-2")
+    assert(GraftDdl.sink(spark, "pk_sink").get.primaryKey == Seq("k", "g"))
+    GraftDdl.alterSink(spark, "pk_sink", "'path' = '/tmp/pk-sink-2'")
+    assert(GraftDdl.sink(spark, "pk_sink").get.primaryKey == Seq("k", "g"))
+    assert(GraftDdl.sink(spark, "pk_sink").get.path == "/tmp/pk-sink-2")
     // no constraint → no upsert key
     GraftDdl.executeDdl(spark,
       "CREATE TABLE nopk_sink (k BIGINT) WITH ('path' = '/tmp/nopk-sink')")
-    assert(GraftDdl.sink("nopk_sink").get.primaryKey.isEmpty)
+    assert(GraftDdl.sink(spark, "nopk_sink").get.primaryKey.isEmpty)
   }
 
   test("PARTITIONED BY registers partition columns; LIKE inherits them unless excluded") {
@@ -165,12 +165,12 @@ class DdlFeatureSpec extends GraftSpec {
       """CREATE TABLE part_ddl (id BIGINT, dt STRING, v DOUBLE)
         |PARTITIONED BY (dt)
         |WITH ('path' = '/tmp/part-ddl', 'format' = 'parquet')""".stripMargin)
-    assert(GraftDdl.sink("part_ddl").get.partitions == Seq("dt"))
-    val inherited = GraftDdl.resolveDdl(
+    assert(GraftDdl.sink(spark, "part_ddl").get.partitions == Seq("dt"))
+    val inherited = GraftDdl.resolveDdl(spark,
       "CREATE TABLE part_like WITH ('path' = '/tmp/part-like') " +
         "LIKE part_ddl (OVERWRITING OPTIONS)")
     assert(inherited.contains("PARTITIONED BY (dt)"))
-    val excluded = GraftDdl.resolveDdl(
+    val excluded = GraftDdl.resolveDdl(spark,
       "CREATE TABLE part_nolike WITH ('path' = '/tmp/part-nolike') " +
         "LIKE part_ddl (EXCLUDING PARTITIONS, OVERWRITING OPTIONS)")
     assert(!excluded.toUpperCase.contains("PARTITIONED"))

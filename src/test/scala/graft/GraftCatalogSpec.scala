@@ -97,14 +97,12 @@ class GraftCatalogSpec extends GraftSpec {
     val sinkPath = Tables.scratch("catalog/spec4-sink")
     GraftCatalog.executeDdl(spark, catDir,
       s"CREATE TABLE cat_sink (n BIGINT) WITH ('path' = '$sinkPath')")
-    // the sink registry is JVM-global, so executeDdl alone already left
-    // cat_sink registered — drop it first so the assertion proves restore()
-    // actually REPLAYS the DDL rather than observing the leftover (the r6
-    // ADVICE vacuity)
-    assert(GraftDdl.dropSink("cat_sink"))
-    assert(GraftDdl.sink("cat_sink").isEmpty)
-    GraftCatalog.restore(spark.newSession(), catDir)
-    assert(GraftDdl.sink("cat_sink").exists(_.path == sinkPath))
+    // the sink registry is per session: the new session starts without it,
+    // so seeing it afterwards proves restore() REPLAYED the DDL
+    val restored = spark.newSession()
+    assert(GraftDdl.sink(restored, "cat_sink").isEmpty)
+    GraftCatalog.restore(restored, catDir)
+    assert(GraftDdl.sink(restored, "cat_sink").exists(_.path == sinkPath))
   }
 
   test("PARTITIONED BY and PRIMARY KEY survive catalog replay") {
@@ -114,9 +112,10 @@ class GraftCatalogSpec extends GraftSpec {
         |  PRIMARY KEY (k) NOT ENFORCED)
         |PARTITIONED BY (dt)
         |WITH ('path' = '/tmp/cat-partpk', 'format' = 'parquet')""".stripMargin)
-    GraftDdl.dropSink("cat_partpk")
-    GraftCatalog.restore(spark.newSession(), catDir)
-    val sd = GraftDdl.sink("cat_partpk").get
+    val restored = spark.newSession()
+    assert(GraftDdl.sink(restored, "cat_partpk").isEmpty)
+    GraftCatalog.restore(restored, catDir)
+    val sd = GraftDdl.sink(restored, "cat_partpk").get
     assert(sd.primaryKey == Seq("k"))
     assert(sd.partitions == Seq("dt"))
   }

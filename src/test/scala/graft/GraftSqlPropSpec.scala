@@ -139,7 +139,7 @@ class GraftSqlPropSpec extends GraftSpec {
     holds(Prop.forAll(
       mixCase("create catalog"), mixCase("use catalog"),
       mixCase("drop catalog"), ws) { (cc, uc, dc, w) =>
-      GraftSql.resetNamedCatalogs()
+      GraftSql.resetNamedCatalogs(spark)
       val name = "gsql_prop_cat"
       GraftSql.run(spark, s"$cc$w$name${w}WITH$w('type'$w=$w'generic_in_memory')")
       val listed = GraftSql.run(spark, "SHOW CATALOGS").collect()
@@ -151,7 +151,7 @@ class GraftSqlPropSpec extends GraftSpec {
       GraftSql.run(spark, s"$dc$w$name;")
       val gone = !GraftSql.run(spark, "SHOW CATALOGS").collect()
         .exists(_.getString(0) == name)
-      GraftSql.resetNamedCatalogs()
+      GraftSql.resetNamedCatalogs(spark)
       listed && inUse && gone
     }, n = 40)
   }

@@ -559,7 +559,7 @@ class GraftSqlSpec extends GraftSpec {
     assert(shown.contains("gsql_drop_sink"))
     assert(shown.contains("events")) // catalog views still listed
     GraftSql.run(spark, "DROP TABLE gsql_drop_sink")
-    assert(graft.streaming.GraftDdl.sink("gsql_drop_sink").isEmpty)
+    assert(graft.streaming.GraftDdl.sink(spark, "gsql_drop_sink").isEmpty)
     assert(!GraftSql.run(spark, "SHOW TABLES")
       .collect().map(_.getString(0)).contains("gsql_drop_sink"))
     // neither a sink nor a temp view: the statement falls through to
@@ -672,7 +672,7 @@ class GraftSqlSpec extends GraftSpec {
     try {
       GraftSql.run(spark, "CREATE TABLE gsql_plain_ct (x INT) USING parquet")
       // it registered as a real catalog table, not a graft sink
-      assert(graft.streaming.GraftDdl.sink("gsql_plain_ct").isEmpty)
+      assert(graft.streaming.GraftDdl.sink(spark, "gsql_plain_ct").isEmpty)
       assert(spark.catalog.tableExists("gsql_plain_ct"))
       // and the door's DROP TABLE reaches it via the spark.sql fallthrough
       GraftSql.run(spark, "DROP TABLE gsql_plain_ct")

@@ -109,11 +109,11 @@ class HiveDialectSpec extends GraftSpec {
         s"""CREATE TABLE graft_hd_cols (event_id BIGINT, value DOUBLE)
            |STORED AS PARQUET LOCATION '$path'""".stripMargin)
       door(spark, "ALTER TABLE graft_hd_cols ADD COLUMNS (tag STRING, n INT) CASCADE")
-      val cols = graft.streaming.GraftDdl.tableCols("graft_hd_cols").get
+      val cols = graft.streaming.GraftDdl.tableCols(spark, "graft_hd_cols").get
       assert(cols.toLowerCase.contains("event_id bigint"), cols)
       assert(cols.toLowerCase.contains("tag string"), cols)
       door(spark, "ALTER TABLE graft_hd_cols REPLACE COLUMNS (a INT, b STRING)")
-      val cols2 = graft.streaming.GraftDdl.tableCols("graft_hd_cols").get
+      val cols2 = graft.streaming.GraftDdl.tableCols(spark, "graft_hd_cols").get
       assert(cols2.trim.toLowerCase == "a int, b string", cols2)
       intercept[IllegalArgumentException](door(spark,
         "ALTER TABLE graft_hd_cols CHANGE COLUMN a a1 DECIMAL(5,2)"))
@@ -138,14 +138,14 @@ class HiveDialectSpec extends GraftSpec {
       // ADD inserts BEFORE the partition tail (partition columns are
       // schema-final — SqlCreateHiveTable appends them last, always)
       door(spark, "ALTER TABLE graft_hd_pcols ADD COLUMNS (tag STRING)")
-      val afterAdd = graft.streaming.GraftDdl.tableCols("graft_hd_pcols").get
+      val afterAdd = graft.streaming.GraftDdl.tableCols(spark, "graft_hd_pcols").get
       assert(afterAdd.toLowerCase.replaceAll("\\s+", " ") ==
         "event_id bigint, value double, tag string, etype string, day int",
         afterAdd)
       // REPLACE swaps only the non-partition prefix; the partition
       // definitions survive at the tail (the r13 bug stripped them)
       door(spark, "ALTER TABLE graft_hd_pcols REPLACE COLUMNS (a INT, b STRING)")
-      val afterReplace = graft.streaming.GraftDdl.tableCols("graft_hd_pcols").get
+      val afterReplace = graft.streaming.GraftDdl.tableCols(spark, "graft_hd_pcols").get
       assert(afterReplace.toLowerCase.replaceAll("\\s+", " ") ==
         "a int, b string, etype string, day int", afterReplace)
       // redeclaring a partition column through the surgery is rejected
@@ -219,7 +219,7 @@ class HiveDialectSpec extends GraftSpec {
     try {
       val p = Tables.scratch("hive-dialect-gate")
       door(spark, s"CREATE TABLE graft_hd_gate (x INT) STORED AS PARQUET LOCATION '$p'")
-      assert(graft.streaming.GraftDdl.tableOptions("graft_hd_gate")
+      assert(graft.streaming.GraftDdl.tableOptions(spark, "graft_hd_gate")
         .exists(_.get("format").contains("parquet")))
     } finally door(spark, s"SET ${HiveDialect.DialectKey} = default")
     assert(!HiveDialect.isHive(spark))
