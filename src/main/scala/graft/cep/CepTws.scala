@@ -160,7 +160,6 @@ object CepTws {
   /** [[CepOps.streamingMatches]]'s shape on the new runtime. */
   def streamingMatchesTws(ds: Dataset[Ev], pat: Pattern[Ev],
       delay: String = "0 seconds"): Dataset[CepMatch] = {
-    val spark = ds.sparkSession
     implicit val enc: Encoder[CepMatch] = Encoders.product[CepMatch]
     streamingMatchesWithTimeoutsTws(ds, pat, delay)
       .filter(!_.is_timeout)

@@ -2,7 +2,7 @@ package graft.dsl
 
 import graft.Tables
 import graft.operators.GraftSql
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The reference's PRIMARY entry class as a facade — TableEnvironment
   * (flink-table-api-java/.../TableEnvironment.java): from:668,

@@ -1024,7 +1024,7 @@ object GraftSql {
 
   private def executeInsert(spark: SparkSession, mode: String, name: String,
       sd: graft.streaming.GraftDdl.SinkDef, select: String,
-      partitionTxt: Option[String] = None): (DataFrame, Long) = {
+      partitionTxt: Option[String]): (DataFrame, Long) = {
     // static partition values become constant columns on every inserted
     // row (the reference's static-partition insert); the DDL's PARTITIONED
     // BY columns drive the physical layout below

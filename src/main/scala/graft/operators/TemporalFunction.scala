@@ -162,7 +162,10 @@ object TemporalFunction {
         (if (where.nonEmpty) s" WHERE $where" else "") +
         Option(groupTxt).map(requalify).getOrElse("") +
         Option(orderTxt).map(requalify).getOrElse("")
-      spark.sql(sqlText)
+      // spark.sql analyzes eagerly: the returned plan holds the view's plan,
+      // not its name, so the view can go before the caller sees the rows
+      try spark.sql(sqlText)
+      finally spark.catalog.dropTempView(view)
     case other => throw new IllegalArgumentException(
       s"unrecognized temporal-table-function SQL (expected SELECT … FROM p, " +
         s"LATERAL TABLE (fn(p.ts)) AS r WHERE p.k = r.pk …): $other")

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.Q
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Time-bucketed decomposition of the stream-stream interval join — the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Q, Tables}
+import graft.Q
 import graft.operators.SimhashBanding
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._

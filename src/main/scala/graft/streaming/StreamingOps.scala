@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionArtifacts
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Structured Streaming twins of the window/dedup operators (reference §2.7:
@@ -88,9 +89,10 @@ object StreamingOps {
   /** Set one session conf for the duration of `f`, then restore the
     * caller's value (or unset it if the caller had none). A streaming
     * query started inside `f` keeps the value: it plans in a clone of the
-    * session taken at start. */
+    * session taken at start. `getAll` holds only what the caller set;
+    * `getOption` also returns a key's default, which would come back set. */
   def withConf[T](spark: SparkSession, key: String, value: String)(f: => T): T = {
-    val prev = spark.conf.getOption(key)
+    val prev = spark.conf.getAll.get(key)
     spark.conf.set(key, value)
     try f
     finally prev match {
@@ -103,7 +105,20 @@ object StreamingOps {
     * checkpoint location and starts the query under
     * [[LocalCheckpointFileManager]], so its offset/commit logs, source logs
     * and state stores write checkpoint files without forking
-    * `chmod`/`readlink`. */
+    * `chmod`/`readlink`.
+    *
+    * The query also starts with `spark.sql.artifact.isolation.enabled` off.
+    * `start()` runs the query in a clone of the session, and a clone with
+    * isolation on gets a fresh artifact session: its tasks load generated
+    * classes through a classloader of their own. Spark's codegen cache is
+    * keyed on the classloader and the code, so every query would compile
+    * the same classes again (12 Janino compiles per run of
+    * q_stream_tumble). With isolation off the clone's tasks share the
+    * executor's default classloader, so a class they use compiles once per
+    * JVM, not once per query. Isolation stays on
+    * when the caller's session has added artifacts, so its jars and
+    * classes stay visible to its streams. Either way the caller's conf
+    * is restored. */
   def startQuery(spark: SparkSession, writer: DataStreamWriter[_], ckpt: String): StreamingQuery =
     startQuery(spark, writer.option("checkpointLocation", ckpt))
 
@@ -112,12 +127,16 @@ object StreamingOps {
   def startQuery(spark: SparkSession, writer: DataStreamWriter[_]): StreamingQuery =
     withConf(spark, LocalCheckpointFileManager.ClassKey,
         classOf[LocalCheckpointFileManager].getName) {
-      val q = writer.start()
-      // file sources build their metadata log on the query's own thread,
-      // from THIS session's conf: hold the setting until that has happened
-      q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
-        .streamingQuery.awaitInitialization(Long.MaxValue)
-      q
+      def start(): StreamingQuery = {
+        val q = writer.start()
+        // file sources build their metadata log on the query's own thread,
+        // from THIS session's conf: hold the setting until that has happened
+        q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.awaitInitialization(Long.MaxValue)
+        q
+      }
+      if (SessionArtifacts.added(spark)) start()
+      else withConf(spark, "spark.sql.artifact.isolation.enabled", "false")(start())
     }
 
   /** Run a streaming DataFrame to completion into an in-memory table and

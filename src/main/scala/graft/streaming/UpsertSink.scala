@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Changelog (upsert) sink pattern — the Spark mapping of the reference's
   * retraction streams + exactly-once sinks (RowKind +I/+U rows from

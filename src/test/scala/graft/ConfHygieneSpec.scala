@@ -27,12 +27,22 @@ class ConfHygieneSpec extends GraftSpec {
   }
 
   test("streaming queries restore spark.sql.streaming.checkpointFileManagerClass") {
-    val key = graft.streaming.LocalCheckpointFileManager.ClassKey
-    val before = spark.conf.getOption(key)
-    for (q <- Seq("q_stream_tumble", "q_cdc_upsert_door")) {
-      assert(SparkEntry.queries(q)(spark, sfDir).count() > 0)
-      assert(spark.conf.getOption(key) == before,
-        s"$q leaked the checkpoint file manager: ${spark.conf.getOption(key)} (was $before)")
-    }
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val keys = Seq(graft.streaming.LocalCheckpointFileManager.ClassKey, isolation)
+    // what the caller set: getOption would also report a key's default
+    def callerSet = keys.map(spark.conf.getAll.get)
+    val callerIsolation = spark.conf.getAll.get(isolation)
+    // startQuery turns artifact isolation off for the query's clone: the
+    // caller's setting comes back whether it was unset or set
+    try for (setting <- Seq(None, Some("true"))) {
+      setting.fold(spark.conf.unset(isolation))(spark.conf.set(isolation, _))
+      val before = callerSet
+      for (q <- Seq("q_stream_tumble", "q_cdc_upsert_door")) {
+        assert(SparkEntry.queries(q)(spark, sfDir).count() > 0)
+        assert(callerSet == before,
+          s"$q leaked a conf with isolation ${setting.getOrElse("unset")}: " +
+            s"${keys.zip(callerSet)} (was $before)")
+      }
+    } finally callerIsolation.fold(spark.conf.unset(isolation))(spark.conf.set(isolation, _))
   }
 }

@@ -71,6 +71,26 @@ class TemporalFunctionSpec extends GraftSpec {
     assert(rows == Seq((1L, 114.0), (2L, 116.0)))
   }
 
+  test("the SQL correlate leaves no graft_ttf_ view in the session catalog") {
+    import spark.implicits._
+    registerRates()
+    Seq((1L, "eur", 2L, 10.0), (2L, "yen", 3L, 50.0))
+      .toDF("order_id", "currency", "t", "amount")
+      .withColumn("ot", timestamp_seconds(col("t"))).drop("t")
+      .createOrReplaceTempView("ttf_orders4")
+    def views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_ttf_")).toSet
+    val before = views
+    val rows = GraftSql.run(spark,
+      """SELECT o.order_id AS order_id, r.rate AS rate
+        |FROM ttf_orders4 AS o, LATERAL TABLE (rates(o.ot)) AS r
+        |WHERE r.currency = o.currency
+        |ORDER BY order_id""".stripMargin)
+      .as[(Long, Double)].collect().toSeq
+    assert(rows == Seq((1L, 114.0), (2L, 1.0)))
+    assert(views == before, s"correlate views left behind: ${views -- before}")
+  }
+
   test("a correlate with no primary-key equality is rejected, like the planner rule") {
     registerRates()
     import spark.implicits._
