@@ -94,19 +94,14 @@ object Bench {
       require(unmatched.isEmpty,
         s"SPARK_GRAFT_BENCH_ONLY names match no query: ${unmatched.toSeq.sorted.mkString(",")}")
     }
-    // attribution hook for the state-partition detail map (r21 item 8):
-    // stateful queries record their effective partition count under the
-    // name set here; timing itself is unchanged
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
-      streaming.StreamingOps.currentQueryName.set(name)
+    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      streaming.StreamingOps.currentQueryName.remove()
       ((System.nanoTime() - t0) / 1e9, ok)
     }
     val firstPass = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => name -> timed(name, fn) }
+      .map { case (name, fn) => name -> timed(fn) }
     // Host-drift self-defense: the last three rounds each needed manual
     // clean-run forensics because uptime-correlated host load charged 4-8 s
     // to queries whose committed clean-run time is ~1 s with identical plans
@@ -137,7 +132,7 @@ object Bench {
       candidates.sortBy { case (_, t, ref) => -(t / ref) }.flatMap { case (name, t1, _) =>
         if (spent > budget) None
         else {
-          val (t2, ok) = timed(name, SparkEntry.queries(name))
+          val (t2, ok) = timed(SparkEntry.queries(name))
           spent += t2
           hostDriftReruns += 1
           Some(name -> (if (ok) math.min(t1, t2) else t1))
@@ -186,19 +181,11 @@ object Bench {
     // the front is unparseable — exactly what happened to BENCH_r01..r03.
     // The stdout line carries the totals plus the slowest queries and is
     // sized to survive the tail buffer; BENCH_FULL.json has everything.
-    // effective state-partition count per stateful query (r21 item 8) —
-    // detail-file only, so the size-capped stdout line is untouched
-    val statePartsJson = {
-      import scala.jdk.CollectionConverters._
-      streaming.StreamingOps.effectiveStatePartitions.asScala.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    }
     val fullJson =
       s"""{"metric":"total","value":${fmt(scaleTotal + calibTotal)},"unit":"sec",""" +
         s""""scale_total":${fmt(scaleTotal)},"failed":$failedJson,""" +
         s""""queries":${obj(scale)},"calibration":${obj(calib)},""" +
         s""""calibration_total":${fmt(calibTotal)},"host_drift_rerun":$hostDriftReruns,""" +
-        s""""state_partitions":$statePartsJson,""" +
         s""""n_queries":${results.size},"sf":"$sfDir"}"""
     if (only.isEmpty) try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")

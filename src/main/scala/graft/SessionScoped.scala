@@ -16,10 +16,9 @@ import org.apache.spark.sql.SparkSession
   *
   * JVM-wide on purpose: `UpsertSink.InMemoryStore` and
   * `LookupJoin.CsvFileBackend` (read on executors, which have no session),
-  * `Tables.schemaCache` (a pure function of the fixture files),
-  * `StreamingOps.effectiveStatePartitions`/`currentQueryName` (bench
-  * telemetry of the running query) and the checkpoint root (moving it
-  * would change the streaming benchmark's I/O). */
+  * `Tables.schemaCache` (a pure function of the fixture files) and the
+  * checkpoint root (moving it would change the streaming benchmark's
+  * I/O). */
 final class SessionScoped[V <: AnyRef](init: => V) {
   private val bySession = new java.util.WeakHashMap[SparkSession, V]()
 

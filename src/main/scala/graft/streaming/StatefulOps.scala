@@ -47,24 +47,33 @@ object StatefulOps {
   }
 
   /** Streaming TopN: keep the per-key top-3 by (value desc, event_id) in
-    * state; emit the refreshed top list every batch (update mode). */
-  val qStreamTopN: Q = Q(
-    "q_stream_topn",
+    * state; emit the refreshed top list every batch (update mode). The
+    * state write is diffed: a batch whose rows all lose to the incumbents
+    * leaves the store untouched (the hot-key case). */
+  def topN(ds: org.apache.spark.sql.Dataset[Ev]): org.apache.spark.sql.Dataset[TopOut] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    ds.groupByKey(_.event_type)
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        (key: String, it: Iterator[Ev], state: GroupState[TopState]) =>
+          val cur = state.getOption.map(_.items).getOrElse(Nil)
+          val merged = (cur ++ it.map(e => TopItem(e.value, e.event_id)))
+            .sortBy(i => (-i.value, i.event_id)).take(3)
+          if (merged != cur) state.update(TopState(merged))
+          merged.zipWithIndex.map { case (i, idx) =>
+            TopOut(key, idx + 1, i.event_id, i.value)
+          }.iterator
+      }
+  }
+
+  /** q_stream_topn and q_tws_topn: [[topN]] per event type, each name into
+    * its own memory-sink table. */
+  private def topNQuery(name: String): Q = Q(
+    name,
     (s, dir) => StreamingOps.withStatePartitions(s, 8) {
       import s.implicits._
-      val out = events(s, dir)
-        .groupByKey(_.event_type)
-        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-          (key: String, it: Iterator[Ev], state: GroupState[TopState]) =>
-            val cur = state.getOption.map(_.items).getOrElse(Nil)
-            val merged = (cur ++ it.map(e => TopItem(e.value, e.event_id)))
-              .sortBy(i => (-i.value, i.event_id)).take(3)
-            state.update(TopState(merged))
-            merged.zipWithIndex.map { case (i, idx) =>
-              TopOut(key, idx + 1, i.event_id, i.value)
-            }.iterator
-        }.toDF()
-      StreamingOps.runToMemory(s, out, "update", "graft_stream_topn")
+      StreamingOps.runToMemory(s, topN(events(s, dir)).toDF(), "update",
+        StreamingOps.sinkName(name))
         .orderBy($"event_type", $"rn")
     },
     Some("""SELECT event_type, rn, event_id, value FROM (
@@ -74,22 +83,35 @@ object StatefulOps {
            |  FROM events) WHERE rn <= 3
            |ORDER BY event_type, rn""".stripMargin))
 
+  val qStreamTopN: Q = topNQuery("q_stream_topn")
+  val qTwsTopN: Q = topNQuery("q_tws_topn")
+
   /** Dedup keep-last per (user_id, event_type) — the variant Spark's
-    * streaming dropDuplicates cannot express (it keeps first). */
-  val qStreamDedupLast: Q = Q(
-    "q_stream_dedup_last",
+    * streaming dropDuplicates cannot express (it keeps first). The state
+    * is written only when the kept row changes. */
+  def dedupLast(ds: org.apache.spark.sql.Dataset[Ev]): org.apache.spark.sql.Dataset[LastOut] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    ds.groupByKey(e => (e.user_id, e.event_type))
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        (key: (Long, String), it: Iterator[Ev], state: GroupState[LastState]) =>
+          val prior = state.getOption
+          val last = (prior.map(s0 => Ev(s0.event_id, key._1, key._2, s0.value, 0L)) ++ it)
+            .maxBy(_.event_id)
+          val keep = LastState(last.event_id, last.value)
+          if (!prior.contains(keep)) state.update(keep)
+          Iterator.single(LastOut(key._1, key._2, last.event_id, last.value))
+      }
+  }
+
+  /** q_stream_dedup_last and q_tws_dedup_last: [[dedupLast]] of the events
+    * fixture. */
+  private def dedupLastQuery(name: String): Q = Q(
+    name,
     (s, dir) => StreamingOps.withStatePartitions(s, 8) {
       import s.implicits._
-      val out = events(s, dir)
-        .groupByKey(e => (e.user_id, e.event_type))
-        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-          (key: (Long, String), it: Iterator[Ev], state: GroupState[LastState]) =>
-            val last = (state.getOption.map(s0 => Ev(s0.event_id, key._1, key._2, s0.value, 0L)) ++ it)
-              .maxBy(_.event_id)
-            state.update(LastState(last.event_id, last.value))
-            Iterator.single(LastOut(key._1, key._2, last.event_id, last.value))
-        }.toDF()
-      StreamingOps.runToMemory(s, out, "update", "graft_stream_dedup_last")
+      StreamingOps.runToMemory(s, dedupLast(events(s, dir)).toDF(), "update",
+        StreamingOps.sinkName(name))
         .orderBy($"user_id", $"event_type")
     },
     Some("""SELECT user_id, event_type, event_id, value FROM (
@@ -98,6 +120,9 @@ object StatefulOps {
            |                            ORDER BY event_id DESC) AS rn
            |  FROM events) WHERE rn = 1
            |ORDER BY user_id, event_type""".stripMargin))
+
+  val qStreamDedupLast: Q = dedupLastQuery("q_stream_dedup_last")
+  val qTwsDedupLast: Q = dedupLastQuery("q_tws_dedup_last")
 
   /** Streaming OVER aggregate: per-row running sum per user, rows ordered by
     * event_id (arrival order). Each input row is emitted exactly once with
@@ -226,7 +251,9 @@ object StatefulOps {
     * RetractableTopNFunction.java). Spark's update mode only carries the
     * condensed +U view, so operators feeding downstream consumers that need
     * retractions materialize a row_kind column, exactly as SURVEY §1.2 plans.
-    * Per batch and key: diff of old vs new top-3 by rank position. */
+    * Per batch and key: diff of old vs new top-3 by rank position; a batch
+    * whose rows all lose to the incumbents emits nothing and leaves the
+    * store untouched. */
   def topNChangelog(ds: org.apache.spark.sql.Dataset[Ev])
       : org.apache.spark.sql.Dataset[TopChange] = {
     val spark = ds.sparkSession
@@ -237,7 +264,7 @@ object StatefulOps {
           val old = state.getOption.map(_.items).getOrElse(Nil)
           val merged = (old ++ it.map(e => TopItem(e.value, e.event_id)))
             .sortBy(i => (-i.value, i.event_id)).take(3)
-          state.update(TopState(merged))
+          if (merged != old) state.update(TopState(merged))
           (0 until math.max(old.size, merged.size)).iterator.flatMap { r =>
             (old.lift(r), merged.lift(r)) match {
               case (None, Some(n)) =>
@@ -486,14 +513,15 @@ object StatefulOps {
 
   /** Changelog TopN as an oracle-checked query: over a single data batch the
     * emitted changelog is exactly the +I rows of the final per-type top-3
-    * (multi-batch retraction sequences are covered by ChangelogJoinSpec /
-    * TemporalSortTtlSpec). */
-  val qChangelogTopN: Q = Q(
-    "q_changelog_topn",
+    * (the multi-batch retraction sequence is pinned in
+    * TwsChangelogTopNSpec). q_changelog_topn and q_tws_changelog_topn both
+    * run it, each into its own memory-sink table. */
+  private def changelogTopNQuery(name: String): Q = Q(
+    name,
     (s, dir) => StreamingOps.withStatePartitions(s, 8) {
       import s.implicits._
       val out = topNChangelog(events(s, dir)).toDF()
-      StreamingOps.runToMemory(s, out, "append", "graft_changelog_topn")
+      StreamingOps.runToMemory(s, out, "append", StreamingOps.sinkName(name))
         .orderBy($"event_type", $"rn")
     },
     Some("""SELECT event_type, '+I' AS row_kind,
@@ -503,7 +531,11 @@ object StatefulOps {
            |FROM events QUALIFY rn <= 3
            |ORDER BY event_type, rn""".stripMargin))
 
+  val qChangelogTopN: Q = changelogTopNQuery("q_changelog_topn")
+  val qTwsChangelogTopN: Q = changelogTopNQuery("q_tws_changelog_topn")
+
   val all: Seq[Q] = Seq(
     qStreamTopN, qStreamDedupLast, qStreamOver, qStreamAsof, qStreamIntervalJoin,
-    qStreamTemporalSort, qChangelogTopN, qStreamOverRange, qStreamOverRows)
+    qStreamTemporalSort, qChangelogTopN, qStreamOverRange, qStreamOverRows,
+    qTwsTopN, qTwsDedupLast, qTwsChangelogTopN)
 }

@@ -49,42 +49,9 @@ object StreamingOps {
     * micro-batch (store open/commit), so a low-cardinality keyed op wants far
     * fewer partitions than the session default — and a 100 TB one wants more;
     * this is the knob. The session conf is restored afterwards (the running
-    * query keeps the value it was planned with).
-    *
-    * SPARK_GRAFT_STATE_PARTITIONS overrides every call site's local value
-    * (r20): the per-query numbers are sized to the FIXTURE's keyed
-    * cardinality, and a scale run (the growth gate's 100x/1000x trees, a
-    * cluster deployment) needs state-stage parallelism sized to ITS data —
-    * one env knob re-sizes the whole family without touching per-operator
-    * defaults, keeping the bench comparable across rounds. */
-  /** Bench attribution hook (r21, verdict item 8): the bench sets the
-    * query name it is about to time; [[withStatePartitions]] records the
-    * EFFECTIVE partition count under it, and the bench writes the map into
-    * BENCH_FULL.json — so a driver round can correlate the state-sizing
-    * knob with the stateful family's timings instead of taking the
-    * builder's A/B on faith. Inheritable: foreachBatch bodies run on
-    * streaming-execution threads. */
-  val currentQueryName = new InheritableThreadLocal[String]
-  val effectiveStatePartitions =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
-  def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    // validate the override eagerly and by name (ADVICE r20): a typo'd env
-    // value would otherwise throw a bare NumberFormatException deep inside
-    // every stateful query, and 0/negative would reach shuffle.partitions
-    val eff = sys.env.get("SPARK_GRAFT_STATE_PARTITIONS")
-      .map(_.trim).filter(_.nonEmpty).map { v =>
-        val i =
-          try v.toInt
-          catch { case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, got '$v'") }
-        require(i > 0,
-          s"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, got '$v'")
-        i
-      }.getOrElse(n)
-    Option(currentQueryName.get).foreach(effectiveStatePartitions.put(_, eff))
-    withConf(spark, "spark.sql.shuffle.partitions", eff.toString)(f)
-  }
+    * query keeps the value it was planned with). */
+  def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions", n.toString)(f)
 
   /** Set one session conf for the duration of `f`, then restore the
     * caller's value (or unset it if the caller had none). A streaming
@@ -218,21 +185,31 @@ object StreamingOps {
            |       event_type, count(*) AS cnt, round(sum(value), 2) AS total
            |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
 
+  /** The memory-sink table of a named query: `graft_` plus the name
+    * without its `q_`. Queries built by one function of their name keep
+    * their own tables this way. */
+  private[streaming] def sinkName(query: String): String =
+    "graft_" + query.stripPrefix("q_")
+
   /** Streaming deduplication (append mode) — reference
     * DeduplicateKeepFirstRowFunction.java via streaming dropDuplicates.
-    * Output restricted to the key columns so keep-first equals DISTINCT. */
-  val qStreamDedup: Q = Q(
-    "q_stream_dedup",
+    * Output restricted to the key columns so keep-first equals DISTINCT.
+    * q_stream_dedup and q_tws_dedup both run it. */
+  private def dedupQuery(name: String): Q = Q(
+    name,
     (s, dir) => withStatePartitions(s, 8) {
       import s.implicits._
       val dedup = streamTable(s, dir, "events")
         .select($"user_id", $"event_type")
         .dropDuplicates("user_id", "event_type")
-      runToMemory(s, dedup, "append", "graft_stream_dedup")
+      runToMemory(s, dedup, "append", sinkName(name))
         .orderBy($"user_id", $"event_type")
     },
     Some("""SELECT DISTINCT user_id, event_type FROM events
            |ORDER BY user_id, event_type""".stripMargin))
+
+  val qStreamDedup: Q = dedupQuery("q_stream_dedup")
+  val qTwsDedup: Q = dedupQuery("q_tws_dedup")
 
   /** Streaming sliding-window aggregate (complete mode), hop twin. */
   val qStreamHop: Q = Q(
@@ -351,5 +328,5 @@ object StreamingOps {
            |  WHERE n_tok >= 20 GROUP BY fp)""".stripMargin))
 
   val all: Seq[Q] = Seq(qStreamTumble, qStreamDedup, qStreamHop, qStreamSession,
-    qStreamStaticJoin, qStreamCalc, qStreamPipeline)
+    qStreamStaticJoin, qStreamCalc, qStreamPipeline, qTwsDedup)
 }

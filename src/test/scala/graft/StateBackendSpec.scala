@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.Trigger
   * the backend is a conf, exactly as in the reference. */
 class StateBackendSpec extends GraftSpec {
 
-  test("transformWithState: named-state dedup equals batch DISTINCT") {
+  test("q_tws_dedup: streaming dedup equals batch DISTINCT") {
     import spark.implicits._
     val got = SparkEntry.queries("q_tws_dedup")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet

@@ -1,68 +1,46 @@
 package graft
 
-import graft.streaming.{StatefulOps, TwsOps}
+import graft.streaming.StatefulOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-import org.apache.spark.sql.{Encoder, Encoders}
 
-/** Cross-batch retraction parity for the transformWithState changelog TopN
-  * (reference RetractableTopNFunction.java): the TwS processor must emit
-  * the SAME +I/-U/+U/-D sequence as the fMGWS [[StatefulOps.topNChangelog]]
-  * on a multi-batch script where later arrivals displace incumbents. */
+/** Cross-batch retraction sequence of the changelog TopN (reference
+  * RetractableTopNFunction.java): [[StatefulOps.topNChangelog]], which
+  * q_changelog_topn and q_tws_changelog_topn both run, must emit the
+  * reference +I/-U/+U/-D algebra on a multi-batch script where later
+  * arrivals displace incumbents. */
 class TwsChangelogTopNSpec extends GraftSpec {
 
   private def ev(id: Long, v: Double, t: String = "click") =
     StatefulOps.Ev(id, 1L, t, v, id * 1000L)
 
-  private def changes(table: String): Seq[(String, String, Int, Long, Double)] =
-    spark.table(table).collect().map(r => (
-      r.getAs[String]("event_type"), r.getAs[String]("row_kind"),
-      r.getAs[Int]("rn"), r.getAs[Long]("event_id"),
-      r.getAs[Double]("value"))).toSeq
-
-  test("tws changelog top-3 emits the same retraction sequence as the fMGWS twin") {
+  test("changelog top-3 emits the reference retraction sequence across batches") {
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx = spark.sqlContext
-    implicit val enc: Encoder[StatefulOps.TopChange] =
-      Encoders.product[StatefulOps.TopChange]
 
-    // the same three-batch script through both runtimes: fill the top-3,
-    // displace rank 2 (one -U/+U pair expected), then lose to incumbents
-    // (nothing expected — the diffed TwS write must also skip the store)
+    // fill the top-3, displace rank 2 (one -U/+U pair per shifted rank
+    // expected), then lose to incumbents (nothing expected)
     val script: Seq[Seq[StatefulOps.Ev]] = Seq(
       Seq(ev(1, 10.0), ev(2, 8.0), ev(3, 6.0)),
       Seq(ev(4, 9.0)),
       Seq(ev(5, 1.0)))
 
-    def drive(name: String)(
-        wire: org.apache.spark.sql.Dataset[StatefulOps.Ev]
-          => org.apache.spark.sql.Dataset[StatefulOps.TopChange])
-        : Seq[(String, String, Int, Long, Double)] = {
-      val mem = MemoryStream[StatefulOps.Ev]
-      val q = wire(mem.toDS()).toDF().writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-      script.foreach { batch => mem.addData(batch: _*); q.processAllAvailable() }
-      q.stop()
-      changes(name)
-    }
-
-    val fmgws = drive("cl_topn_fmgws")(StatefulOps.topNChangelog)
-    val tws = TwsOps.withRocksDb(spark) {
-      drive("cl_topn_tws")(_.groupByKey(_.event_type)
-        .transformWithState(new TwsOps.ChangelogTopNProcessor,
-          TimeMode.None(), OutputMode.Append()))
-    }
-    assert(tws == fmgws, s"tws=$tws\nfmgws=$fmgws")
-    // and the sequence itself is the reference algebra: 3 inserts, then
-    // the rank-2/3 shift from the batch-2 displacement, then silence
-    assert(fmgws == Seq(
+    val mem = MemoryStream[StatefulOps.Ev]
+    val q = StatefulOps.topNChangelog(mem.toDS()).toDF().writeStream.format("memory")
+      .queryName("cl_topn").outputMode("append").start()
+    script.foreach { batch => mem.addData(batch: _*); q.processAllAvailable() }
+    q.stop()
+    val got = spark.table("cl_topn").as[StatefulOps.TopChange].collect()
+      .map(c => (c.event_type, c.row_kind, c.rn, c.event_id, c.value)).toSeq
+    // 3 inserts, then the rank-2/3 shift from the batch-2 displacement,
+    // then silence
+    assert(got == Seq(
       ("click", "+I", 1, 1L, 10.0),
       ("click", "+I", 2, 2L, 8.0),
       ("click", "+I", 3, 3L, 6.0),
       ("click", "-U", 2, 2L, 8.0),
       ("click", "+U", 2, 4L, 9.0),
       ("click", "-U", 3, 3L, 6.0),
-      ("click", "+U", 3, 2L, 8.0)), fmgws)
+      ("click", "+U", 3, 2L, 8.0)), got)
   }
 }

@@ -2,20 +2,21 @@ package graft
 
 import graft.streaming.ChangelogJoin
 import graft.streaming.ChangelogJoin.{Change, JoinedChange}
-import graft.streaming.StatefulOps.EvT
-import graft.streaming.TwsOps
+import graft.streaming.{StatefulOps, TwsOps}
+import graft.streaming.StatefulOps.{Ev, EvT}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 import java.sql.Timestamp
 
-/** Hot-key soak for the transformWithState stateful operators — the
-  * evidence behind the "survives 100×" claim: ONE key receiving tens of
-  * thousands of rows across many micro-batches must keep state BOUNDED
-  * (by the operator's own retention rule, not the stream length) and
-  * drain in time linear in the input. Wall-clock bounds are generous
-  * (load-tolerant) but far below what quadratic per-firing behavior or
-  * unbounded state rewrite would cost; exact run numbers are recorded in
-  * BENCH_NOTES.md. */
+/** Hot-key soak for the stateful operators — the evidence behind the
+  * "survives 100×" claim: ONE key receiving tens of thousands of rows
+  * across many micro-batches must keep state BOUNDED (by the operator's
+  * own retention rule, not the stream length) and drain in time linear in
+  * the input. The transformWithState families run on RocksDB; the
+  * small-state families (dedup keep-first and keep-last, TopN, changelog
+  * TopN) run on flatMapGroupsWithState / dropDuplicates with the default
+  * store. Wall-clock bounds are generous (load-tolerant) but far below
+  * what quadratic per-firing behavior or unbounded state rewrite would
+  * cost; exact run numbers are recorded in BENCH_NOTES.md. */
 class TwsScaleSpec extends GraftSpec {
 
   private val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
@@ -23,31 +24,96 @@ class TwsScaleSpec extends GraftSpec {
   private def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
     q.lastProgress.stateOperators.map(_.numRowsTotal).sum
 
+  /** State rows written by the batches after the seed batch 0. */
+  private def rowsUpdatedAfterSeed(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    q.recentProgress.filter(_.batchId >= 1)
+      .map(_.stateOperators.map(_.numRowsUpdated).sum).sum
+
+  /** Batch 0: three rows on one key that no later row beats; then 10 batches
+    * of 5k losing rows on that key. */
+  private def feedLosers(mem: MemoryStream[Ev], q: org.apache.spark.sql.streaming.StreamingQuery)
+      : Double = {
+    mem.addData(Ev(1, 1L, "click", 1e9, 0L), Ev(2, 1L, "click", 1e9 - 1, 0L),
+      Ev(3, 1L, "click", 1e9 - 2, 0L))
+    q.processAllAvailable()
+    val t0 = System.nanoTime()
+    for (b <- 1 to 10) {
+      mem.addData((1 to 5000).map(i => Ev(b * 100000L + i, 1L, "click", i.toDouble, 0L)): _*)
+      q.processAllAvailable()
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
+
   test("soak: dedup — 100k same-key rows across 10 batches keep ONE state row and ONE output") {
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx = spark.sqlContext
-    TwsOps.withRocksDb(spark) {
-      implicit val outEnc = org.apache.spark.sql.Encoders.product[TwsOps.TwsOut]
-      val mem = MemoryStream[(Long, String)]
-      val out = mem.toDS().groupByKey(identity)
-        .transformWithState(new TwsOps.DedupFirstProcessor,
-          TimeMode.None(), OutputMode.Append())
-      val q = out.toDF().writeStream.format("memory")
-        .queryName("tws_soak_dedup").outputMode("append").start()
-      try {
-        val t0 = System.nanoTime()
-        for (_ <- 1 to 10) {
-          mem.addData(Seq.fill(10000)((1L, "click")): _*)
-          q.processAllAvailable()
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
-        assert(spark.table("tws_soak_dedup").count() == 1)
-        assert(stateRows(q) == 1, s"dedup state must be one row per distinct key, got ${stateRows(q)}")
-        assert(secs < 120, s"100k-row dedup soak took $secs s")
-        info(f"dedup soak: 100k rows / 10 batches in $secs%.1f s, state rows = ${stateRows(q)}")
-      } finally q.stop()
-    }
+    val mem = MemoryStream[(Long, String)]
+    val out = mem.toDF().toDF("user_id", "event_type").dropDuplicates("user_id", "event_type")
+    val q = out.writeStream.format("memory")
+      .queryName("soak_dedup").outputMode("append").start()
+    try {
+      val t0 = System.nanoTime()
+      for (_ <- 1 to 10) {
+        mem.addData(Seq.fill(10000)((1L, "click")): _*)
+        q.processAllAvailable()
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(spark.table("soak_dedup").count() == 1)
+      assert(stateRows(q) == 1, s"dedup state must be one row per distinct key, got ${stateRows(q)}")
+      assert(secs < 120, s"100k-row dedup soak took $secs s")
+      info(f"dedup soak: 100k rows / 10 batches in $secs%.1f s, state rows = ${stateRows(q)}")
+    } finally q.stop()
+  }
+
+  test("soak: dedup-last — 50k older rows on one key keep ONE state row and never touch the store") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val q = StatefulOps.dedupLast(mem.toDS()).toDF().writeStream.format("memory")
+      .queryName("soak_dedup_last").outputMode("update").start()
+    try {
+      // batch 0 holds the highest id; every later row is older, so the
+      // kept row never changes and the diffed write skips the store
+      mem.addData(Ev(10000000L, 1L, "click", 7.0, 0L))
+      q.processAllAvailable()
+      val t0 = System.nanoTime()
+      for (b <- 1 to 10) {
+        mem.addData((1 to 5000).map(i => Ev(b * 100000L + i, 1L, "click", i.toDouble, 0L)): _*)
+        q.processAllAvailable()
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      // update mode emits the kept row once per touched batch
+      val kept = spark.table("soak_dedup_last").select($"event_id", $"value")
+        .as[(Long, Double)].collect()
+      assert(kept.length == 11 && kept.forall(_ == ((10000000L, 7.0))), kept.toSeq)
+      assert(stateRows(q) == 1, s"dedup-last state must be one row per key, got ${stateRows(q)}")
+      assert(rowsUpdatedAfterSeed(q) == 0,
+        s"older rows must not rewrite the kept row, got ${rowsUpdatedAfterSeed(q)} writes")
+      assert(secs < 120, s"50k-row dedup-last soak took $secs s")
+      info(f"dedup-last soak: 50k rows / 10 batches in $secs%.1f s, state rows = ${stateRows(q)}")
+    } finally q.stop()
+  }
+
+  test("soak: TopN — 50k losing rows on one key keep ONE state row and never touch the store") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val q = StatefulOps.topN(mem.toDS()).toDF().writeStream.format("memory")
+      .queryName("soak_topn").outputMode("update").start()
+    try {
+      val secs = feedLosers(mem, q)
+      // update mode emits the unchanged top-3 once per touched batch
+      val ids = spark.table("soak_topn").select($"event_id").as[Long].collect()
+      assert(ids.length == 33 && ids.toSet == Set(1L, 2L, 3L), ids.toSeq)
+      assert(stateRows(q) == 1, s"TopN state must be one top-list row, got ${stateRows(q)}")
+      assert(rowsUpdatedAfterSeed(q) == 0,
+        s"losing rows must not rewrite the top list, got ${rowsUpdatedAfterSeed(q)} writes")
+      assert(secs < 120, s"50k-loser TopN soak took $secs s")
+      info(f"TopN soak: 50k losers / 10 batches in $secs%.1f s, state rows = ${stateRows(q)}")
+    } finally q.stop()
   }
 
   test("soak: temporal sort — 50k one-key rows drain in order with state emptied behind the watermark") {
@@ -175,7 +241,6 @@ class TwsScaleSpec extends GraftSpec {
     import sparkS.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.cep.{AfterMatch, CepTws, Pattern}
-    import graft.streaming.StatefulOps.Ev
     TwsOps.withRocksDb(spark) {
       val B = 3600000000L
       val mem = MemoryStream[Ev]
@@ -260,7 +325,6 @@ class TwsScaleSpec extends GraftSpec {
     import sparkS.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.TriggerWindows
-    import graft.streaming.StatefulOps.Ev
     TwsOps.withRocksDb(spark) {
       val mem = MemoryStream[Ev]
       val out = TriggerWindows.countWindowTws[Long, Ev, (Long, Long, Double)](
@@ -342,44 +406,26 @@ class TwsScaleSpec extends GraftSpec {
     // the hot-key case for a retractable rank is arrivals that LOSE to the
     // incumbents: the reference's RetractableTopNFunction pays a sorted-map
     // probe per row; here a losing batch must cost zero state writes and
-    // zero output (the diffed ValueState write), with state bounded at the
+    // zero output (the diffed state write), with state bounded at the
     // top-3 regardless of stream length
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx = spark.sqlContext
-    TwsOps.withRocksDb(spark) {
-      implicit val outEnc =
-        org.apache.spark.sql.Encoders.product[graft.streaming.StatefulOps.TopChange]
-      val mem = MemoryStream[graft.streaming.StatefulOps.Ev]
-      val out = mem.toDS().groupByKey(_.event_type)
-        .transformWithState(new TwsOps.ChangelogTopNProcessor,
-          TimeMode.None(), OutputMode.Append())
-      val q = out.toDF().writeStream.format("memory")
-        .queryName("tws_soak_cltopn").outputMode("append").start()
-      try {
-        // batch 0 seeds the top-3 with values no later row beats
-        mem.addData(
-          graft.streaming.StatefulOps.Ev(1, 1L, "click", 1e9, 0L),
-          graft.streaming.StatefulOps.Ev(2, 1L, "click", 1e9 - 1, 0L),
-          graft.streaming.StatefulOps.Ev(3, 1L, "click", 1e9 - 2, 0L))
-        q.processAllAvailable()
-        val t0 = System.nanoTime()
-        for (b <- 1 to 10) {
-          mem.addData((1 to 5000).map(i =>
-            graft.streaming.StatefulOps.Ev(b * 100000L + i, 1L, "click",
-              i.toDouble, 0L)): _*)
-          q.processAllAvailable()
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
-        // only the three seed +I rows ever emitted; state = the one top list
-        assert(spark.table("tws_soak_cltopn").count() == 3)
-        assert(stateRows(q) == 1,
-          s"changelog TopN state must be one top-list row, got ${stateRows(q)}")
-        assert(secs < 120, s"50k-loser changelog TopN soak took $secs s")
-        info(f"changelog TopN soak: 50k losers / 10 batches in $secs%.1f s, " +
-          s"state rows = ${stateRows(q)}, emitted = 3")
-      } finally q.stop()
-    }
+    val mem = MemoryStream[Ev]
+    val q = StatefulOps.topNChangelog(mem.toDS()).toDF().writeStream.format("memory")
+      .queryName("soak_cltopn").outputMode("append").start()
+    try {
+      val secs = feedLosers(mem, q)
+      // only the three seed +I rows ever emitted; state = the one top list
+      assert(spark.table("soak_cltopn").count() == 3)
+      assert(stateRows(q) == 1,
+        s"changelog TopN state must be one top-list row, got ${stateRows(q)}")
+      assert(rowsUpdatedAfterSeed(q) == 0,
+        s"losing rows must not rewrite the top list, got ${rowsUpdatedAfterSeed(q)} writes")
+      assert(secs < 120, s"50k-loser changelog TopN soak took $secs s")
+      info(f"changelog TopN soak: 50k losers / 10 batches in $secs%.1f s, " +
+        s"state rows = ${stateRows(q)}, emitted = 3")
+    } finally q.stop()
   }
 
   test("soak: as-of TTL join — 50k one-key rows keep ONE version row and O(1) state calls per batch") {
