@@ -9,10 +9,9 @@ import graft.streaming.StatefulOps.{EvT, RangeOut, usOf}
   * buffered timestamps once per firing, retracting rows that leave the
   * frame, instead of re-aggregating every frame from scratch).
   *
-  * Both OVER runtimes (the fMGWS operators in [[StatefulOps]] and the
-  * transformWithState processors in [[TwsOps]]) delegate here: a firing
-  * that drains a slice of n due rows against a referable relation of m
-  * rows costs O(m + n) after one O(m log m) sort — previously each due
+  * The bounded-preceding OVER operators in [[StatefulOps]] delegate here:
+  * a firing that drains a slice of n due rows against a referable relation
+  * of m rows costs O(m + n) after one O(m log m) sort — previously each due
   * row re-filtered and re-summed the whole relation, which went quadratic
   * exactly when it matters most: a watermark CATCH-UP (bootstrap replay,
   * recovery after downtime) draining a key's entire history in one firing.
@@ -21,7 +20,7 @@ import graft.streaming.StatefulOps.{EvT, RangeOut, usOf}
   * (`BigDecimal(double)` is the value's shortest decimal representation, so
   * additions and the closing subtraction are exact — no floating-point
   * drift between a frame summed fresh and one summed incrementally), then
-  * rounded once at emission like both prior runtimes.
+  * rounded once at emission.
   */
 private[graft] object OverFrames {
 

@@ -184,12 +184,13 @@ object StatefulOps {
         if (st.exists(v => v.tsMs + ttlMs <= fired)) (None, Nil) else (st, Nil))
   }
 
-  /** Streaming temporal (as-of) join through [[asofWithTtl]] — the retention
-    * knob is wired (10 years here: the fixture spans days, so no version
-    * expires and the batch oracle is unchanged; deployments size it to their
-    * key-idle horizon). TTL expiry itself is asserted in AsofTtlSpec. */
-  val qStreamAsof: Q = Q(
-    "q_stream_asof",
+  /** q_stream_asof and q_tws_asof: streaming temporal (as-of) join through
+    * [[asofWithTtl]] — the retention knob is wired (10 years here: the
+    * fixture spans days, so no version expires and the batch oracle is
+    * unchanged; deployments size it to their key-idle horizon). TTL expiry
+    * itself is asserted in AsofTtlSpec. */
+  private def asofQuery(name: String): Q = Q(
+    name,
     (s, dir) => StreamingOps.withStatePartitions(s, 8) {
       import s.implicits._
       // the event-time watermark must SURVIVE down to the stateful op
@@ -203,7 +204,7 @@ object StatefulOps {
         .withWatermark("ts", "0 seconds")
         .as[Tagged]
       val out = asofWithTtl(tagged, ttlMs = 10L * 365 * 86400 * 1000).toDF()
-      StreamingOps.runToMemory(s, out, "append", "graft_stream_asof")
+      StreamingOps.runToMemory(s, out, "append", StreamingOps.sinkName(name))
         .orderBy($"event_id")
     },
     Some("""SELECT a.event_id,
@@ -213,6 +214,9 @@ object StatefulOps {
            |     AND b.ts <= a.ts) AS last_signup_value
            |FROM events a WHERE a.event_type = 'purchase'
            |ORDER BY a.event_id""".stripMargin))
+
+  val qStreamAsof: Q = asofQuery("q_stream_asof")
+  val qTwsAsof: Q = asofQuery("q_tws_asof")
 
   /** Stream-stream interval join (built-in; reference RowTimeIntervalJoin):
     * purchase ⋈ same-user clicks in the preceding 10 minutes. Watermarks
@@ -320,8 +324,56 @@ object StatefulOps {
       })
   }
 
-  case class RangeBuf(evs: List[EvT])
+  /** Per-key state of the bounded-preceding OVER operators: `pending` rows
+    * wait for the watermark; `emitted` rows were released but a future
+    * frame can still reference them, kept in (µs, event_id) order. A row
+    * counts as emitted because it is in `emitted`, not because of its
+    * millisecond: a late-admitted sub-millisecond row in an already
+    * released millisecond lands in `pending` and is emitted once, alone. */
+  case class OverBuf(pending: List[EvT], emitted: List[EvT])
   case class RangeOut(event_id: Long, user_id: Long, range_sum: Double)
+
+  /** The emit rule both bounded OVER operators share, on
+    * [[TimerOps.processWithTimers]]. Each arrival joins `pending` and
+    * registers an EMIT timer at its floor-ms timestamp (Spark's watermark
+    * is the µs max event time truncated down to ms, so a rounded-UP timer
+    * would never fire for the stream's last row), plus the operator's own
+    * `evictAt` timer. A firing at `t` releases every pending row with
+    * ts <= max(t, watermark) in ONE drain and deletes those rows' emit
+    * timers, so a watermark advance past k distinct milliseconds costs one
+    * sort of the key's rows, not k. `frames` computes the released rows'
+    * outputs over the emitted history plus the released slice (still
+    * pending rows all lie after it, so no released frame can reference
+    * them); `retain` keeps the emitted rows a future frame can still
+    * reference, given the rows still pending and the µs watermark. */
+  private def overPreceding(ds: org.apache.spark.sql.Dataset[EvT])(
+      evictAt: EvT => Option[Long],
+      frames: (Long, List[EvT], List[EvT]) => List[RangeOut],
+      retain: (List[EvT], List[EvT], Long) => List[EvT])
+      : org.apache.spark.sql.Dataset[RangeOut] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    TimerOps.processWithTimers[Long, EvT, OverBuf, RangeOut](ds)(_.user_id, _.event_id)(
+      onElement = (_, e, st, ctx) => {
+        ctx.registerTimer(e.ts.getTime)
+        evictAt(e).foreach(ctx.registerTimer)
+        val buf = st.getOrElse(OverBuf(Nil, Nil))
+        (Some(buf.copy(pending = e :: buf.pending)), Nil)
+      },
+      onTimer = (key, t, st, ctx) => {
+        val buf = st.getOrElse(OverBuf(Nil, Nil))
+        val releaseUpTo = math.max(t, ctx.watermarkMs)
+        val (released, pending) = buf.pending.partition(_.ts.getTime <= releaseUpTo)
+        // timers fire only at or below the watermark, so an evict timer
+        // sharing a deleted value guards rows this drain evicts anyway
+        released.iterator.map(_.ts.getTime).distinct.foreach(ctx.deleteTimer)
+        val due = OverFrames.canon(released)
+        val ordered = if (due.isEmpty) buf.emitted else OverFrames.canon(buf.emitted ++ due)
+        val out = if (due.isEmpty) Nil else frames(key, due, ordered)
+        val emitted = retain(ordered, pending, ctx.watermarkMs * 1000)
+        (if (pending.isEmpty && emitted.isEmpty) None else Some(OverBuf(pending, emitted)), out)
+      })
+  }
 
   /** Streaming OVER with a time-RANGE bounded-preceding frame — reference
     * operators/over/RowTimeRangeBoundedPrecedingFunction.java:1: for each
@@ -329,53 +381,31 @@ object StatefulOps {
     * the key's rows in [ts − range, ts] (inclusive both ends = SQL
     * `RANGE BETWEEN <range> PRECEDING AND CURRENT ROW`, peers included).
     *
-    * Built on [[TimerOps.processWithTimers]], two timers per buffered row:
-    *  - an EMIT timer at the row's own timestamp (fires when the watermark
-    *    guarantees every frame member has arrived — rows with smaller ts
-    *    that would arrive later are below the watermark and dropped),
-    *  - an EVICT timer at ts + range (the row has left every possible
-    *    future frame; the buffer shrinks as the watermark advances even if
-    *    the key never sees another row — the reference's cleanup timer).
-    *
-    * Frame math is in MICROSECONDS (event timestamps carry µs precision;
-    * ms-truncated frames would disagree with a µs-precision oracle at the
-    * boundaries). Timers are ms-granular like the watermark itself: the EMIT
-    * timer is the row's floor-ms timestamp (Spark's watermark is the µs max
-    * event time truncated down to ms, so a rounded-UP timer would never fire
-    * for the stream's last row); the EVICT timer is floor-ms + 1 of the
-    * frame-exit point so it fires strictly after the row left every frame.
+    * Built on [[overPreceding]]; besides the emit timer each row registers
+    * an EVICT timer at floor-ms + 1 of its frame-exit point ts + range, so
+    * it fires strictly after the row left every possible future frame and
+    * the state shrinks as the watermark advances even if the key never
+    * sees another row (the reference's cleanup timer). Frame math is in
+    * MICROSECONDS (event timestamps carry µs precision; ms-truncated frames
+    * would disagree with a µs-precision oracle at the boundaries).
     *
     * State per key = rows inside the trailing `range` window + 2 timers per
     * row — the same bound as the reference operator's MapState<ts, rows>. */
   def overRangePreceding(ds: org.apache.spark.sql.Dataset[EvT], rangeUs: Long)
-      : org.apache.spark.sql.Dataset[RangeOut] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    TimerOps.processWithTimers[Long, EvT, RangeBuf, RangeOut](ds)(_.user_id, _.event_id)(
-      onElement = (_, e, st, ctx) => {
-        ctx.registerTimer(e.ts.getTime)
-        ctx.registerTimer(math.floorDiv(usOf(e.ts) + rangeUs, 1000L) + 1)
-        (Some(RangeBuf(e :: st.map(_.evs).getOrElse(Nil))), Nil)
-      },
-      onTimer = (key, t, st, ctx) => {
-        val buf = st.map(_.evs).getOrElse(Nil)
-        val due = buf.filter(x => x.ts.getTime == t)
-          .sortBy(x => (usOf(x.ts), x.event_id))
-        // one ordered sweep with exact prefix sums (OverFrames) — rows past
-        // a due row's timestamp are never counted, so the whole buffer
-        // (pending rows included) is a valid referable relation
-        val out = OverFrames.rangeSums(key, due, OverFrames.canon(buf), rangeUs)
-        // evict emitted rows that can no longer appear in any frame: not in
-        // a still-buffered unemitted row's frame, and every future arrival
-        // is above the watermark
-        val (emitted, pending) = buf.partition(x => x.ts.getTime <= t)
-        val minPendingUs = pending.map(x => usOf(x.ts)).minOption.getOrElse(Long.MaxValue)
-        val wmUs = ctx.watermarkMs * 1000
-        val keep = pending ++ emitted.filter(x =>
-          usOf(x.ts) + rangeUs >= minPendingUs || usOf(x.ts) + rangeUs >= wmUs)
-        (if (keep.isEmpty) None else Some(RangeBuf(keep)), out)
+      : org.apache.spark.sql.Dataset[RangeOut] =
+    overPreceding(ds)(
+      evictAt = e => Some(math.floorDiv(usOf(e.ts) + rangeUs, 1000L) + 1),
+      frames = (key, due, ordered) => OverFrames.rangeSums(key, due, ordered, rangeUs),
+      retain = (ordered, pending, wmUs) => {
+        // an emitted row survives only while a pending row's frame, or a
+        // possible future arrival above the watermark, can still reference
+        // it; frame exits grow with the row, so the evicted rows are a
+        // prefix of the ordered history
+        val minPendingUs = pending.iterator.map(e => usOf(e.ts)).minOption
+          .getOrElse(Long.MaxValue)
+        val bound = math.min(minPendingUs, wmUs)
+        ordered.dropWhile(e => usOf(e.ts) + rangeUs < bound)
       })
-  }
 
   /** Streaming OVER with a ROWS bounded-preceding frame — reference
     * operators/over/RowTimeRowsBoundedPrecedingFunction.java: per row, once
@@ -383,61 +413,52 @@ object StatefulOps {
     * `nRows` rows up to and including it in total (ts, event_id) order
     * (SQL `ROWS BETWEEN nRows-1 PRECEDING AND CURRENT ROW`).
     *
-    * State per key is structurally bounded: after each firing only the
-    * nRows−1 most recent EMITTED rows are retained (exactly the rows any
-    * future row's frame can still reference — the reference operator's
-    * retract-when-full List<RowData> state), plus rows still awaiting their
-    * emit timer. Unlike the RANGE variant no evict timers are needed: the
-    * bound is by count, enforced at every firing. */
+    * State per key is count-bounded (the reference operator's
+    * retract-when-full List<RowData> state), so no evict timers are needed:
+    * after each drain the emitted history keeps the rows above the µs
+    * watermark plus the nRows−1 rows before them. A bare takeRight(nRows−1)
+    * is not enough: a FUTURE row (late-admissible = usOf above the µs
+    * watermark) may slot between already-emitted rows above the watermark,
+    * and its frame then needs the nRows−1 rows BEFORE that region too
+    * (r10 review). */
   def overRowsPreceding(ds: org.apache.spark.sql.Dataset[EvT], nRows: Int)
-      : org.apache.spark.sql.Dataset[RangeOut] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    TimerOps.processWithTimers[Long, EvT, RangeBuf, RangeOut](ds)(_.user_id, _.event_id)(
-      onElement = (_, e, st, ctx) => {
-        ctx.registerTimer(e.ts.getTime)
-        (Some(RangeBuf(e :: st.map(_.evs).getOrElse(Nil))), Nil)
-      },
-      onTimer = (key, t, st, ctx) => {
-        val buf = st.map(_.evs).getOrElse(Nil)
-        val ordered = OverFrames.canon(buf)
-        val due = ordered.filter(_.ts.getTime == t)
-        // positional sweep with prefix sums (OverFrames) — replaces the
-        // per-due-row takeWhile prefix scan
-        val out = OverFrames.rowsSums(key, due, ordered, nRows)
-        val (emitted, pending) = ordered.partition(_.ts.getTime <= t)
-        // retention must be watermark-aware, not a bare takeRight: a FUTURE
-        // row (late-admissible = usOf above the µs watermark) may slot
-        // between already-emitted rows above the watermark, and its frame
-        // then needs the nRows−1 rows BEFORE that region too — a bare
-        // takeRight(nRows−1) can evict them and corrupt the late row's
-        // frame sum (r10 review). Still count-bounded: at most the
-        // boundary millisecond's rows plus nRows−1.
-        val wmUs = ctx.watermarkMs * 1000
-        val (aboveWm, belowWm) = emitted.partition(x => usOf(x.ts) > wmUs)
-        val keep = belowWm.takeRight(nRows - 1) ++ aboveWm ++ pending
-        (if (keep.isEmpty) None else Some(RangeBuf(keep)), out)
+      : org.apache.spark.sql.Dataset[RangeOut] =
+    overPreceding(ds)(
+      evictAt = _ => None,
+      frames = (key, due, ordered) => OverFrames.rowsSums(key, due, ordered, nRows),
+      retain = (ordered, _, wmUs) => {
+        val (aboveWm, belowWm) = ordered.partition(e => usOf(e.ts) > wmUs)
+        belowWm.takeRight(nRows - 1) ++ aboveWm
       })
+
+  /** The events as [[EvT]] with a 0-delay watermark on `ts`, so the final
+    * no-data micro-batch's watermark releases every buffered row. */
+  private[streaming] def eventsT(s: SparkSession, dir: String) = {
+    import s.implicits._
+    StreamingOps.streamTable(s, dir, "events")
+      .withWatermark("ts", "0 seconds")
+      .select($"event_id", $"user_id", $"value", $"ts").as[EvT]
   }
 
-  /** ROWS bounded-preceding OVER as an oracle-checked query: sum of the
-    * last 3 values per user in (ts, event_id) order — the tie-broken total
-    * order makes the SQL ROWS frame deterministic cross-engine. */
-  val qStreamOverRows: Q = Q(
-    "q_stream_over_rows",
+  /** q_stream_over_rows and q_tws_over_rows: ROWS bounded-preceding OVER as
+    * an oracle-checked query — sum of the last 3 values per user in
+    * (ts, event_id) order; the tie-broken total order makes the SQL ROWS
+    * frame deterministic cross-engine. */
+  private def overRowsQuery(name: String): Q = Q(
+    name,
     (s, dir) => StreamingOps.withStatePartitions(s, 8) {
       import s.implicits._
-      val in = StreamingOps.streamTable(s, dir, "events")
-        .withWatermark("ts", "0 seconds")
-        .select($"event_id", $"user_id", $"value", $"ts").as[EvT]
-      val out = overRowsPreceding(in, nRows = 3).toDF()
-      StreamingOps.runToMemory(s, out, "append", "graft_stream_over_rows")
+      val out = overRowsPreceding(eventsT(s, dir), nRows = 3).toDF()
+      StreamingOps.runToMemory(s, out, "append", StreamingOps.sinkName(name))
         .orderBy($"user_id", $"event_id")
     },
     Some("""SELECT event_id, user_id,
            |       round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
            |         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 2) AS range_sum
            |FROM events ORDER BY user_id, event_id""".stripMargin))
+
+  val qStreamOverRows: Q = overRowsQuery("q_stream_over_rows")
+  val qTwsOverRows: Q = overRowsQuery("q_tws_over_rows")
 
   case class SeenAt(firstTsMs: Long)
 
@@ -477,10 +498,7 @@ object StatefulOps {
     "q_stream_temporal_sort",
     (s, dir) => StreamingOps.withStatePartitions(s, 8) {
       import s.implicits._
-      val in = StreamingOps.streamTable(s, dir, "events")
-        .withWatermark("ts", "0 seconds")
-        .select($"event_id", $"user_id", $"value", $"ts").as[EvT]
-      val out = temporalSort(in).toDF()
+      val out = temporalSort(eventsT(s, dir)).toDF()
         .select($"event_id", $"user_id", $"value", unix_micros($"ts").as("ts_us"))
       StreamingOps.runToMemory(s, out, "append", "graft_stream_temporal_sort")
         .orderBy($"event_id")
@@ -489,20 +507,16 @@ object StatefulOps {
            |       CAST(epoch_us(ts) AS BIGINT) AS ts_us
            |FROM events ORDER BY event_id""".stripMargin))
 
-  /** Streaming time-RANGE bounded OVER as an oracle-checked query: trailing
-    * 1-hour sum of `value` per user — "sum over the preceding hour per row",
-    * the most common streaming-OVER shape. Watermark delay 0, so the final
-    * no-data micro-batch emits every row; the oracle is the literal SQL
-    * RANGE frame. */
-  val qStreamOverRange: Q = Q(
-    "q_stream_over_range",
+  /** q_stream_over_range and q_tws_over_range: time-RANGE bounded OVER as
+    * an oracle-checked query — trailing 1-hour sum of `value` per user,
+    * "sum over the preceding hour per row", the most common streaming-OVER
+    * shape. The oracle is the literal SQL RANGE frame. */
+  private def overRangeQuery(name: String): Q = Q(
+    name,
     (s, dir) => StreamingOps.withStatePartitions(s, 8) {
       import s.implicits._
-      val in = StreamingOps.streamTable(s, dir, "events")
-        .withWatermark("ts", "0 seconds")
-        .select($"event_id", $"user_id", $"value", $"ts").as[EvT]
-      val out = overRangePreceding(in, rangeUs = 3600L * 1000000).toDF()
-      StreamingOps.runToMemory(s, out, "append", "graft_stream_over_range")
+      val out = overRangePreceding(eventsT(s, dir), rangeUs = 3600L * 1000000).toDF()
+      StreamingOps.runToMemory(s, out, "append", StreamingOps.sinkName(name))
         .orderBy($"user_id", $"event_id")
     },
     Some("""SELECT event_id, user_id,
@@ -510,6 +524,9 @@ object StatefulOps {
            |         RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW), 2)
            |         AS range_sum
            |FROM events ORDER BY user_id, event_id""".stripMargin))
+
+  val qStreamOverRange: Q = overRangeQuery("q_stream_over_range")
+  val qTwsOverRange: Q = overRangeQuery("q_tws_over_range")
 
   /** Changelog TopN as an oracle-checked query: over a single data batch the
     * emitted changelog is exactly the +I rows of the final per-type top-3
@@ -537,5 +554,6 @@ object StatefulOps {
   val all: Seq[Q] = Seq(
     qStreamTopN, qStreamDedupLast, qStreamOver, qStreamAsof, qStreamIntervalJoin,
     qStreamTemporalSort, qChangelogTopN, qStreamOverRange, qStreamOverRows,
-    qTwsTopN, qTwsDedupLast, qTwsChangelogTopN)
+    qTwsTopN, qTwsDedupLast, qTwsChangelogTopN, qTwsOverRange, qTwsOverRows,
+    qTwsAsof)
 }

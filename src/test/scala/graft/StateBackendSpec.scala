@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 /** State backend swap (reference flink-state-backends/ — MemoryStateBackend
   * vs RocksDBStateBackend chosen per job): Spark's analogue is the state
@@ -24,7 +25,6 @@ class StateBackendSpec extends GraftSpec {
 
   test("transformWithState: native event-time timer fires when the watermark passes") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
@@ -45,7 +45,7 @@ class StateBackendSpec extends GraftSpec {
         .withWatermark("ts", "0 seconds")
         .select($"k", $"ts_ms").as[(Long, Long)]
         .groupByKey(_._1)
-        .transformWithState(new streaming.TwsOps.FirstEventTimeout,
+        .transformWithState(new StateBackendSpec.FirstEventTimeout,
           TimeMode.EventTime(), OutputMode.Append())
       val q = out.toDF("k", "fired_at").writeStream
         .format("memory").queryName("tws_timer").outputMode("append")
@@ -66,7 +66,6 @@ class StateBackendSpec extends GraftSpec {
 
   test("transformWithState: ListState + MapState variables across micro-batches") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
@@ -80,7 +79,7 @@ class StateBackendSpec extends GraftSpec {
       val out = spark.readStream.schema("k long, v double")
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in/*")
         .as[(Long, Double)].groupByKey(_._1)
-        .transformWithState(new streaming.TwsOps.ListMapStats,
+        .transformWithState(new StateBackendSpec.ListMapStats,
           TimeMode.None(), OutputMode.Update())
       val q = out.toDF("k", "recent_sum", "n_buckets").writeStream
         .format("memory").queryName("tws_listmap").outputMode("update")
@@ -145,6 +144,71 @@ class StateBackendSpec extends GraftSpec {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
       }
+    }
+  }
+}
+
+object StateBackendSpec {
+
+  /** Native event-time timers on the new API (reference
+    * KeyedProcessFunction#onTimer + InternalTimerService): each key
+    * registers a timer 1 ms past its first event; when the watermark passes
+    * it, handleExpiredTimer emits a timeout row — the session-timeout /
+    * TTL-eviction shape without any hand-built timer heap. Exercised across
+    * ≥2 micro-batches so registration and expiry happen in different
+    * batches. */
+  class FirstEventTimeout
+      extends StatefulProcessor[Long, (Long, Long), (Long, Long)] {
+    @transient private var armed: ValueState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      armed = getHandle.getValueState[Long]("armed", Encoders.scalaLong, TTLConfig.NONE)
+
+    override def handleInputRows(key: Long, rows: Iterator[(Long, Long)],
+        timerValues: TimerValues): Iterator[(Long, Long)] = {
+      if (!armed.exists()) {
+        val firstTsMs = rows.map(_._2).min
+        getHandle.registerTimer(firstTsMs + 1)
+        armed.update(firstTsMs)
+      } else rows.foreach(_ => ()) // drain
+      Iterator.empty
+    }
+
+    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
+        expiredTimerInfo: ExpiredTimerInfo): Iterator[(Long, Long)] =
+      Iterator.single((key, expiredTimerInfo.getExpiryTimeInMs))
+  }
+
+  /** Full state-variable surface of the new API (reference state descriptor
+    * family: ValueStateDescriptor / ListStateDescriptor / MapStateDescriptor):
+    * per key, a ListState of recent values (bounded to the last 3) and a
+    * MapState of per-bucket counts, exercised together. */
+  class ListMapStats
+      extends StatefulProcessor[Long, (Long, Double), (Long, Double, Long)] {
+    @transient private var recent: ListState[Double] = _
+    @transient private var buckets: MapState[Long, Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      recent = getHandle.getListState[Double]("recent", Encoders.scalaDouble, TTLConfig.NONE)
+      buckets = getHandle.getMapState[Long, Long]("buckets",
+        Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
+    }
+
+    override def handleInputRows(key: Long, rows: Iterator[(Long, Double)],
+        timerValues: TimerValues): Iterator[(Long, Double, Long)] = {
+      rows.foreach { case (_, v) =>
+        recent.appendValue(v)
+        val b = math.floor(v / 100.0).toLong
+        val cur = if (buckets.containsKey(b)) buckets.getValue(b) else 0L
+        buckets.updateValue(b, cur + 1)
+      }
+      val vals = recent.get().toSeq
+      if (vals.size > 3) { // keep the trailing 3 — bounded list state
+        recent.put(vals.takeRight(3).toArray)
+      }
+      val kept = recent.get().toSeq
+      val nBuckets = { var n = 0L; val it = buckets.keys(); while (it.hasNext) { it.next(); n += 1 }; n }
+      Iterator.single((key, kept.sum, nBuckets))
     }
   }
 }

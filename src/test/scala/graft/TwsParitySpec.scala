@@ -1,20 +1,12 @@
 package graft
 
-/** Spark-side parity for the r13 transformWithState migrations before the
-  * driver's DuckDB gate runs: the TwS as-of join and running OVER must
-  * agree with their oracle-green fMGWS twins on the events fixture, and
-  * the TwS queryable-state loop must agree with the plain batch aggregate.
-  * (q_tws_topn and q_tws_dedup_last run the same operator as their fMGWS
-  * twins, so they have no parity case.) */
+/** Spark-side parity for the r13 transformWithState migrations, ahead of
+  * the DuckDB oracle check in Verify: the TwS running OVER must agree with its
+  * oracle-green fMGWS twin on the events fixture, and the TwS
+  * queryable-state loop must agree with the plain batch aggregate. (The
+  * other q_tws_* names run the same function as their fMGWS twins, so they
+  * have no parity case.) */
 class TwsParitySpec extends GraftSpec {
-
-  test("q_tws_asof matches the fMGWS q_stream_asof on the fixture") {
-    val tws = SparkEntry.queries("q_tws_asof")(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    val fmgws = SparkEntry.queries("q_stream_asof")(spark, sfDir)
-      .collect().map(_.toSeq).toSeq
-    assert(tws.nonEmpty && tws == fmgws)
-  }
 
   test("q_tws_stream_over matches the fMGWS q_stream_over on the fixture") {
     val tws = SparkEntry.queries("q_tws_stream_over")(spark, sfDir)

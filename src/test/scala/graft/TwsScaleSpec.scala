@@ -12,17 +12,46 @@ import java.sql.Timestamp
   * across many micro-batches must keep state BOUNDED (by the operator's
   * own retention rule, not the stream length) and drain in time linear in
   * the input. The transformWithState families run on RocksDB; the
-  * small-state families (dedup keep-first and keep-last, TopN, changelog
-  * TopN) run on flatMapGroupsWithState / dropDuplicates with the default
-  * store. Wall-clock bounds are generous (load-tolerant) but far below
-  * what quadratic per-firing behavior or unbounded state rewrite would
-  * cost; exact run numbers are recorded in BENCH_NOTES.md. */
+  * flatMapGroupsWithState / dropDuplicates families run on the default
+  * store, where one hot key is one state row, so their buffered families
+  * (OVER range and rows, as-of TTL) also assert that the state's bytes stay
+  * flat across batches. Wall-clock bounds are generous (load-tolerant) but
+  * far below what quadratic per-firing behavior or unbounded state rewrite
+  * would cost; exact run numbers are recorded in BENCH_NOTES.md. */
 class TwsScaleSpec extends GraftSpec {
 
   private val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
 
   private def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
     q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+
+  private def stateBytes(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum
+
+  /** State bytes after batch 9 within 10% of those after batch 1 (batch 0
+    * starts from an empty store). */
+  private def assertFlat(bytes: Seq[Long], what: String): Unit =
+    assert(bytes(9) <= bytes(1) * 1.1,
+      s"$what state bytes must stay flat from batch 1 to batch 9, got ${bytes.mkString(", ")}")
+
+  /** 10 batches of 5k rows on key 1 at 1 s spacing (values i % 10, ids from
+    * 1), then one far-future key-2 row that releases the rest. Returns the
+    * elapsed seconds and the state bytes after each of the 10 batches. */
+  private def feedOneKey(mem: MemoryStream[EvT], q: org.apache.spark.sql.streaming.StreamingQuery)
+      : (Double, Seq[Long]) = {
+    val n = 50000; val batches = 10
+    val t0 = System.nanoTime()
+    val bytes = (0 until batches).map { b =>
+      val start = b * (n / batches)
+      mem.addData((start until start + n / batches).map(i =>
+        EvT(i.toLong + 1, 1L, (i % 10).toDouble, new Timestamp(base + i * 1000L))): _*)
+      q.processAllAvailable()
+      stateBytes(q)
+    }
+    mem.addData(EvT(0L, 2L, 1.0, new Timestamp(base + 10L * n * 1000)))
+    q.processAllAvailable()
+    ((System.nanoTime() - t0) / 1e9, bytes)
+  }
 
   /** State rows written by the batches after the seed batch 0. */
   private def rowsUpdatedAfterSeed(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
@@ -154,34 +183,50 @@ class TwsScaleSpec extends GraftSpec {
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx = spark.sqlContext
-    TwsOps.withRocksDb(spark) {
-      val mem = MemoryStream[EvT]
-      val out = TwsOps.overRangeTws(
-        mem.toDS().withWatermark("ts", "0 seconds").as[EvT],
-        rangeUs = 60L * 1000000)
-      val q = out.toDF().writeStream.format("memory")
-        .queryName("tws_soak_over").outputMode("append").start()
-      try {
-        val n = 50000; val batches = 10
-        val t0 = System.nanoTime()
-        for (b <- 0 until batches) {
-          val start = b * (n / batches)
-          mem.addData((start until start + n / batches).map(i =>
-            EvT(i.toLong + 1, 1L, (i % 10).toDouble, new Timestamp(base + i * 1000L))): _*)
-          q.processAllAvailable()
-        }
-        mem.addData(EvT(0L, 2L, 1.0, new Timestamp(base + 10L * n * 1000)))
-        q.processAllAvailable()
-        val secs = (System.nanoTime() - t0) / 1e9
-        assert(spark.table("tws_soak_over").where($"user_id" === 1L).count() == n)
-        // retention = the trailing 60 s window (61 rows at 1 s spacing) in
-        // per-ms buckets + pending boundary + scalars — NOT the stream
-        assert(stateRows(q) <= 80,
-          s"OVER state must be window-bounded, got ${stateRows(q)}")
-        assert(secs < 180, s"50k-row OVER soak took $secs s")
-        info(f"over-range soak: $n rows / $batches batches in $secs%.1f s, state rows = ${stateRows(q)}")
-      } finally q.stop()
-    }
+    val mem = MemoryStream[EvT]
+    val out = StatefulOps.overRangePreceding(
+      mem.toDS().withWatermark("ts", "0 seconds").as[EvT],
+      rangeUs = 60L * 1000000)
+    val q = out.toDF().writeStream.format("memory")
+      .queryName("soak_over_range").outputMode("append").start()
+    try {
+      val (secs, bytes) = feedOneKey(mem, q)
+      assert(spark.table("soak_over_range").where($"user_id" === 1L).count() == 50000)
+      // retention = the trailing 60 s window (61 rows at 1 s spacing) +
+      // their evict timers — NOT the stream: one row per key, flat bytes
+      assert(stateRows(q) <= 80,
+        s"OVER state must be window-bounded, got ${stateRows(q)}")
+      assertFlat(bytes, "OVER range")
+      assert(secs < 180, s"50k-row OVER soak took $secs s")
+      info(f"over-range soak: 50000 rows / 10 batches in $secs%.1f s, " +
+        s"state rows = ${stateRows(q)}, state bytes = ${bytes.mkString(", ")}")
+    } finally q.stop()
+  }
+
+  test("soak: OVER rows — 50k one-key rows keep only the last nRows−1 rows in state") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[EvT]
+    val out = StatefulOps.overRowsPreceding(
+      mem.toDS().withWatermark("ts", "0 seconds").as[EvT], nRows = 3)
+    val q = out.toDF().writeStream.format("memory")
+      .queryName("soak_over_rows").outputMode("append").start()
+    try {
+      val (secs, bytes) = feedOneKey(mem, q)
+      val got = spark.table("soak_over_rows").where($"user_id" === 1L).collect()
+        .map(r => (r.getLong(0), r.getDouble(2))).toMap
+      assert(got.size == 50000, s"expected every row once, got ${got.size}")
+      // id i + 1 holds value i % 10; its frame is ids i − 1 .. i + 1
+      for (i <- Seq(0, 1, 2, 4999, 5000, 49999))
+        assert(got(i + 1L) == (math.max(0, i - 2) to i).map(_ % 10).sum.toDouble,
+          s"row ${i + 1}: ${got(i + 1L)}")
+      assert(stateRows(q) <= 2, s"ROWS state must be one row per key, got ${stateRows(q)}")
+      assertFlat(bytes, "OVER rows")
+      assert(secs < 180, s"50k-row OVER rows soak took $secs s")
+      info(f"over-rows soak: 50000 rows / 10 batches in $secs%.1f s, " +
+        s"state rows = ${stateRows(q)}, state bytes = ${bytes.mkString(", ")}")
+    } finally q.stop()
   }
 
   test("soak: changelog aggregate — 50k churning changes on one key keep state at the live multiset") {
@@ -430,46 +475,45 @@ class TwsScaleSpec extends GraftSpec {
 
   test("soak: as-of TTL join — 50k one-key rows keep ONE version row and O(1) state calls per batch") {
     // alternating signup/purchase on one hot key: state must stay at the
-    // single latest version (+ timer bookkeeping), and ingest must be
-    // bounded by ONE ver write + one timer re-arm per batch — per-row
-    // timer/state calls would cost the probed ~5 ms each (the appendValue
-    // cliff) and push this soak into minutes
+    // single latest version and its one TTL timer (a re-arm deletes the
+    // previous version's timer), however many signups the stream carries
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StatefulOps.{AsofOut, Tagged}
-    TwsOps.withRocksDb(spark) {
-      val baseUs = 1000000000L * 1000000L
-      val mem = MemoryStream[Tagged]
-      val withWm = mem.toDS()
-        .withColumn("__ts", org.apache.spark.sql.functions.timestamp_micros($"ts_us"))
-        .withWatermark("__ts", "0 seconds")
-        .as[Tagged]
-      val out = TwsOps.asofTtlTws(withWm, ttlMs = 10L * 365 * 86400 * 1000)
-      val joined = new java.util.concurrent.atomic.AtomicLong
-      val q = out.writeStream.outputMode("append").foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[AsofOut], _: Long) =>
-          joined.addAndGet(batch.filter(_.last_signup_value.isDefined).count()); ()
-      }.start()
-      try {
-        val n = 50000; val batches = 10
-        val t0 = System.nanoTime()
-        for (b <- 0 until batches) {
-          val start = b * (n / batches)
-          mem.addData((start until start + n / batches).map { i =>
-            val isSig = if (i % 2 == 0) 1 else 0
-            Tagged(i.toLong, 1L, i.toDouble, baseUs + i * 1000000L, isSig)
-          }: _*)
-          q.processAllAvailable()
-          assert(stateRows(q) <= 6,
-            s"as-of state must stay at one version, got ${stateRows(q)} after batch $b")
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
-        // every odd row is a purchase joining the even signup before it
-        assert(joined.get() == n / 2, s"expected ${n / 2} joins, got ${joined.get()}")
-        assert(secs < 120, s"50k-row as-of soak took $secs s")
-        info(f"as-of soak: $n rows / $batches batches in $secs%.1f s, state rows = ${stateRows(q)}")
-      } finally q.stop()
-    }
+    val baseUs = 1000000000L * 1000000L
+    val mem = MemoryStream[Tagged]
+    val withWm = mem.toDS()
+      .withColumn("__ts", org.apache.spark.sql.functions.timestamp_micros($"ts_us"))
+      .withWatermark("__ts", "0 seconds")
+      .as[Tagged]
+    val out = StatefulOps.asofWithTtl(withWm, ttlMs = 10L * 365 * 86400 * 1000)
+    val joined = new java.util.concurrent.atomic.AtomicLong
+    val q = out.writeStream.outputMode("append").foreachBatch {
+      (batch: org.apache.spark.sql.Dataset[AsofOut], _: Long) =>
+        joined.addAndGet(batch.filter(_.last_signup_value.isDefined).count()); ()
+    }.start()
+    try {
+      val n = 50000; val batches = 10
+      val t0 = System.nanoTime()
+      val bytes = (0 until batches).map { b =>
+        val start = b * (n / batches)
+        mem.addData((start until start + n / batches).map { i =>
+          val isSig = if (i % 2 == 0) 1 else 0
+          Tagged(i.toLong, 1L, i.toDouble, baseUs + i * 1000000L, isSig)
+        }: _*)
+        q.processAllAvailable()
+        assert(stateRows(q) <= 6,
+          s"as-of state must stay at one version, got ${stateRows(q)} after batch $b")
+        stateBytes(q)
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      // every odd row is a purchase joining the even signup before it
+      assert(joined.get() == n / 2, s"expected ${n / 2} joins, got ${joined.get()}")
+      assertFlat(bytes, "as-of")
+      assert(secs < 120, s"50k-row as-of soak took $secs s")
+      info(f"as-of soak: $n rows / $batches batches in $secs%.1f s, " +
+        s"state rows = ${stateRows(q)}, state bytes = ${bytes.mkString(", ")}")
+    } finally q.stop()
   }
 }

@@ -112,85 +112,6 @@ class TwsTemporalSortSpec extends GraftSpec {
     }
   }
 
-  test("tws over-range emits exact trailing frames and evicts rows no future frame can reference") {
-    val sparkS = spark
-    import sparkS.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    TwsOps.withRocksDb(spark) {
-      val mem = MemoryStream[EvT]
-      val out = TwsOps.overRangeTws(
-        mem.toDS().withWatermark("ts", "0 seconds").as[EvT],
-        rangeUs = 60L * 1000000) // 1-minute trailing frame
-      val q = out.toDF().writeStream.format("memory")
-        .queryName("tws_over_range").outputMode("append").start()
-      // same script as the fMGWS spec: frames {10}, {10,5}, {2}
-      mem.addData(
-        EvT(1, 1L, 10.0, ts("2024-01-01 00:00:00")),
-        EvT(2, 1L, 5.0, ts("2024-01-01 00:00:30")),
-        EvT(3, 1L, 2.0, ts("2024-01-01 00:01:45")))
-      q.processAllAvailable()
-      mem.addData(EvT(9, 2L, 1.0, ts("2024-01-01 00:10:00")))
-      q.processAllAvailable()
-      mem.addData(EvT(10, 2L, 1.0, ts("2024-01-01 00:20:00")))
-      q.processAllAvailable()
-      mem.addData(EvT(11, 2L, 1.0, ts("2024-01-01 00:30:00")))
-      q.processAllAvailable()
-      val got = spark.table("tws_over_range").collect()
-        .map(r => (r.getLong(0), r.getDouble(2))).toMap
-      val expected = Map(1L -> 10.0, 2L -> 15.0, 3L -> 2.0, 9L -> 1.0, 10L -> 1.0)
-      assert(expected.forall { case (k, v) => got.get(k).contains(v) }, s"got $got")
-      // key 1's rows are long past wm + range: its buckets were evicted
-      // (only key 2's recent row + the per-key scalar states survive) —
-      // state growth is bounded by the trailing window, not the stream
-      val numRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      assert(numRows <= 6,
-        s"expected only the trailing-window state to survive eviction, got $numRows")
-      q.stop()
-    }
-  }
-
-  test("tws over-rows: a late-admitted sub-ms row gets its true ROWS frame, and state stays count-bounded") {
-    val sparkS = spark
-    import sparkS.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    TwsOps.withRocksDb(spark) {
-      val mem = MemoryStream[EvT]
-      val out = TwsOps.overRowsTws(
-        mem.toDS().withWatermark("ts", "0 seconds").as[EvT], nRows = 3)
-      val q = out.toDF().writeStream.format("memory")
-        .queryName("tws_over_rows").outputMode("append").start()
-      // four key-1 rows inside ONE millisecond (µs offsets 100..950)
-      mem.addData(
-        EvT(1, 1L, 1.0, ts("2024-01-01 00:00:00.0001")),
-        EvT(2, 1L, 2.0, ts("2024-01-01 00:00:00.0005")),
-        EvT(3, 1L, 3.0, ts("2024-01-01 00:00:00.0009")),
-        EvT(4, 1L, 4.0, ts("2024-01-01 00:00:00.00095")))
-      q.processAllAvailable()
-      // watermark = the ms floor; all four emit (ms-granularity release)
-      mem.addData(EvT(9, 2L, 1.0, ts("2024-01-01 00:00:00.00098")))
-      q.processAllAvailable()
-      // the LATE sub-ms row: µs 200 — above the µs watermark (admitted),
-      // inside the already-released millisecond. Its ROWS(2 preceding)
-      // frame is {id1@100µs, itself} = 1 + 10; a retention that kept only
-      // the last nRows−1 rows would have evicted id1 and emit 10.0
-      mem.addData(EvT(5, 1L, 10.0, ts("2024-01-01 00:00:00.0002")))
-      q.processAllAvailable()
-      mem.addData(EvT(10, 2L, 1.0, ts("2024-01-01 01:00:00")))
-      q.processAllAvailable()
-      val got = spark.table("tws_over_rows").collect()
-        .map(r => (r.getLong(0), r.getDouble(2))).toMap
-      val expected = Map(1L -> 1.0, 2L -> 3.0, 3L -> 6.0, 4L -> 9.0,
-        5L -> 11.0, 9L -> 1.0)
-      assert(expected.forall { case (k, v) => got.get(k).contains(v) }, s"got $got")
-      // count-bounded retention: per key at most nRows−1 history buckets
-      // (+ the boundary ms) and the armed/pending scalars
-      val numRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      assert(numRows <= 10,
-        s"ROWS state must be count-bounded, got $numRows state rows")
-      q.stop()
-    }
-  }
-
   test("tws temporal sort keeps keys independent: one key's watermark release does not drain another's pending rows") {
     val sparkS = spark
     import sparkS.implicits._
